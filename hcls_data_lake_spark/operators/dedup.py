@@ -16,6 +16,8 @@ import itertools
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hcls_data_lake_spark.session import conf_scope
+
 #: Default stop-list cap on inverted-index posting length. A posting of
 #: length f expands to C(f,2) candidate pairs inside ONE aggregation
 #: task, so a single boilerplate shingle / hot LSH band shared by 100k
@@ -346,19 +348,18 @@ def containment_pairs(
     return directional.filter(F.col("containment_bps") >= min_bps)
 
 
-def _loop_parallelism(spark, n_rows: int) -> tuple[str, str]:
+def _loop_parallelism(spark, n_rows: int) -> str:
     """Size the shuffle parallelism of an iterative-loop body to the
     relation it actually shuffles (same rationale as the streaming
     state-partition sizing): a near-dup pair graph is typically orders
     of magnitude smaller than the corpus, and per-round scheduling of
-    32 near-empty tasks dominates small-graph loops. Returns
-    (old_value, new_value) for a try/finally conf guard; scales back
-    up to the session default for genuinely large graphs, so a
-    cluster-sized setting is never reduced below what the data needs.
+    a session's worth of near-empty tasks dominates small-graph loops.
+    Scales back up to the session default for genuinely large graphs,
+    so a cluster-sized setting is never reduced below what the data
+    needs. Callers apply it through ``session.conf_scope``.
     """
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    sized = max(2, min(int(old), n_rows // 25_000))
-    return old, str(sized)
+    session_sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return str(max(2, min(session_sp, n_rows // 25_000)))
 
 
 def connected_components(
@@ -399,16 +400,16 @@ def connected_components(
     eager checkpoint would run the round's plan and then the sum would
     scan the materialized result as a second job. The loop body's
     shuffle parallelism is sized to the (usually tiny) pair graph via
-    _loop_parallelism — per-round scheduling of 32 near-empty tasks
-    was most of the small-graph wall time — and restored afterwards.
+    _loop_parallelism — per-round scheduling of a session's worth of
+    near-empty tasks was most of the small-graph wall time — and
+    restored afterwards.
     """
     spark = pairs.sparkSession
     p = pairs.select(
         F.col(a_col).alias("src"), F.col(b_col).alias("dst")
     ).localCheckpoint(eager=True)
-    old_sp, loop_sp = _loop_parallelism(spark, 2 * p.count())
-    spark.conf.set("spark.sql.shuffle.partitions", loop_sp)
-    try:
+    loop_sp = _loop_parallelism(spark, 2 * p.count())
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": loop_sp}):
         rev = p.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         edges = p.unionByName(rev).distinct().localCheckpoint(eager=True)
         labels = (
@@ -437,8 +438,6 @@ def connected_components(
                 break
             prev = cur
         return labels
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
 
 
 def pagerank(

@@ -65,9 +65,7 @@ def with_global_order(
     """
     cumsums = cumsums or {}
     spark = df.sparkSession
-    n = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or 32
-    )
+    n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     ranged = (
         df.repartitionByRange(n, *order)
         .sortWithinPartitions(*order)
@@ -181,9 +179,7 @@ def grouped_cumsum(
 
     totals = dict(totals or {})
     spark = df.sparkSession
-    n = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or 32
-    )
+    n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     in_cols = list(dict.fromkeys(list(cumsums.values()) + list(totals.values())))
     dtypes = {f.name: f.dataType for f in df.schema.fields}
     for c in in_cols:
@@ -312,9 +308,7 @@ def grouped_running_max(
     from pyspark.sql import types as T
 
     spark = df.sparkSession
-    n = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or 32
-    )
+    n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     dtypes = {f.name: f.dataType for f in df.schema.fields}
     if not isinstance(dtypes[value], (T.LongType, T.DoubleType)):
         raise TypeError(f"grouped_running_max input {value} must be bigint/double")

@@ -5943,6 +5943,7 @@ def q_graph_kcore(spark, sf_dir):
     from pyspark.sql import Observation
 
     from hcls_data_lake_spark.operators.dedup import _loop_parallelism
+    from hcls_data_lake_spark.session import conf_scope
 
     p = _near_pairs_cached(spark, sf_dir, ngram=2, threshold=0.08)
     edges = (
@@ -5951,9 +5952,8 @@ def q_graph_kcore(spark, sf_dir):
         .localCheckpoint()
     )
     n_edges = edges.count()
-    old_sp, loop_sp = _loop_parallelism(spark, n_edges)
-    spark.conf.set("spark.sql.shuffle.partitions", loop_sp)
-    try:
+    loop_sp = _loop_parallelism(spark, n_edges)
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": loop_sp}):
         w_src = Window.partitionBy("src")
         w_dst = Window.partitionBy("dst")
         for i in range(16):
@@ -5974,8 +5974,6 @@ def q_graph_kcore(spark, sf_dir):
             n_edges = n_next
         else:
             raise RuntimeError("k-core did not converge within 16 rounds")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
     return edges.groupBy(F.col("src").alias("doc_id")).agg(
         F.count(F.lit(1)).cast("bigint").alias("core_deg")
     )

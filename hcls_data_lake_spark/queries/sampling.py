@@ -19,6 +19,7 @@ from pyspark.sql.window import Window
 
 from hcls_data_lake_spark.queries.common import t
 from hcls_data_lake_spark.registry import register
+from hcls_data_lake_spark.session import TOKEN_BUDGET
 
 # md5-bucket boundaries: first 2 hex chars = 256 buckets; 'cc' = 204
 # (≈80%), 'e6' = 230 (≈90%). Hex-string comparison is identical in
@@ -253,7 +254,7 @@ def q_sink_shuffled_shards(spark, sf_dir):
 
 @register(
     "q_sample_token_budget",
-    """
+    f"""
     WITH toks AS (
       SELECT doc_id, source, n_chars,
              len(string_split(text, ' ')) AS n_tok
@@ -268,7 +269,7 @@ def q_sink_shuffled_shards(spark, sf_dir):
     SELECT source,
            CAST(count(*) AS BIGINT) AS n_docs_kept,
            CAST(SUM(n_tok) AS BIGINT) AS sum_tokens
-    FROM cum WHERE cum_tok <= 3000
+    FROM cum WHERE cum_tok <= {TOKEN_BUDGET}
     GROUP BY source
     """,
 )
@@ -286,11 +287,13 @@ def q_sample_token_budget(spark, sf_dir):
 
     Scale shape (r13): n_tok = size(split(text,' ')) ≥ 1 for non-null
     text, so cum_tok ≥ rank along the admission order — no row past
-    rank 3000 can ever satisfy cum_tok ≤ 3000. A row_number ≤ 3000
-    pre-filter is therefore result-free, and Spark pushes it below the
-    exchange as WindowGroupLimit(Partial): each map task ships at most
-    3000 rows per source instead of the whole fact, and the cumsum
-    window's input is budget-bounded (≤3000 rows/source), not
+    rank B (the budget, session.TOKEN_BUDGET = 3000) can ever satisfy
+    cum_tok ≤ B. A row_number ≤ B pre-filter is therefore result-free,
+    and Spark pushes it below the exchange as WindowGroupLimit(Partial)
+    (the session posture sets windowGroupLimitThreshold from the same
+    constant, so the push survives a budget change): each map task
+    ships at most B rows per source instead of the whole fact, and the
+    cumsum window's input is budget-bounded (≤B rows/source), not
     fact-sized — the low-cardinality-window hazard the r12 close-out
     flagged. Prefix sums over the pruned set are identical for every
     surviving row (every earlier row in the order has a smaller rank
@@ -306,7 +309,7 @@ def q_sample_token_budget(spark, sf_dir):
         F.col("n_chars").desc(), "doc_id"
     )
     ranked = toks.withColumn("rk", F.row_number().over(wo)).filter(
-        F.col("rk") <= 3000
+        F.col("rk") <= TOKEN_BUDGET
     )
     cum = ranked.withColumn(
         "cum_tok",
@@ -315,7 +318,7 @@ def q_sample_token_budget(spark, sf_dir):
         ),
     )
     return (
-        cum.filter(F.col("cum_tok") <= 3000)
+        cum.filter(F.col("cum_tok") <= TOKEN_BUDGET)
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs_kept"),

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from hcls_data_lake_spark.queries.common import scratch_for, t
 from hcls_data_lake_spark.registry import register
+from hcls_data_lake_spark.session import conf_scope
 
 
 @register(
@@ -213,12 +214,8 @@ def q_sink_backfill_overwrite(spark, sf_dir):
     corrected = e.filter(
         (F.col("d") == F.lit(target)) & (F.col("event_type") != "error")
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    with conf_scope(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         corrected.write.mode("overwrite").partitionBy("d").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     return (
         spark.read.parquet(path)
         .groupBy("d", "event_type")

@@ -19,7 +19,9 @@ from pyspark.sql.window import Window
 
 from hcls_data_lake_spark.queries.common import events, scratch_for
 from hcls_data_lake_spark.registry import register
+from hcls_data_lake_spark.session import conf_scope
 from hcls_data_lake_spark.streaming.runner import (
+    ROCKSDB_STATE,
     read_events_stream,
     run_foreach_batch,
     run_to_memory,
@@ -264,29 +266,13 @@ def q_stream_stateful_tws(spark, sf_dir):
     use_tws = workers_have_protobuf(spark)
     stateful = tws_running_totals if use_tws else running_totals
     sdf = read_events_stream(spark, sf_dir).select("user_id", "value")
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    if use_tws:
-        # TWS requires multiple column families -> RocksDB state store
-        # (the 100 TB state backend; HDFSBacked cannot host TWS state)
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-    try:
+    with conf_scope(spark, ROCKSDB_STATE if use_tws else {}):
         return run_to_memory(
             stateful(sdf),
             output_mode="update",
             shuffle_partitions=8,
             no_data_batches=False,
         )
-    finally:
-        if use_tws:
-            if prev_provider is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev_provider)
 
 
 @register(
@@ -326,27 +312,13 @@ def q_stream_tws_topk(spark, sf_dir):
     sdf = read_events_stream(spark, sf_dir).select(
         "user_id", "value", "event_id"
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    if use_tws:
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-    try:
+    with conf_scope(spark, ROCKSDB_STATE if use_tws else {}):
         return run_to_memory(
             stateful(sdf),
             output_mode="update",
             shuffle_partitions=8,
             no_data_batches=False,
         )
-    finally:
-        if use_tws:
-            if prev_provider is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev_provider)
 
 
 @register(
@@ -431,15 +403,7 @@ def q_stream_tws_timers(spark, sf_dir):
         .select("user_id", "ts")
         .withWatermark("ts", "0 seconds")
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    if use_tws:
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-    try:
+    with conf_scope(spark, ROCKSDB_STATE if use_tws else {}):
         # timers fire on the watermark-advancing no-data batch: KEEP it
         return run_to_memory(
             stateful(sdf),
@@ -447,12 +411,6 @@ def q_stream_tws_timers(spark, sf_dir):
             shuffle_partitions=8,
             no_data_batches=True,
         )
-    finally:
-        if use_tws:
-            if prev_provider is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev_provider)
 
 
 @register(
@@ -485,27 +443,13 @@ def q_stream_tws_mapstate(spark, sf_dir):
     use_tws = workers_have_protobuf(spark)
     stateful = tws_type_counts if use_tws else pandas_state_type_counts
     sdf = read_events_stream(spark, sf_dir).select("user_id", "event_type")
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    if use_tws:
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-    try:
+    with conf_scope(spark, ROCKSDB_STATE if use_tws else {}):
         return run_to_memory(
             stateful(sdf),
             output_mode="update",
             shuffle_partitions=8,
             no_data_batches=False,
         )
-    finally:
-        if use_tws:
-            if prev_provider is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev_provider)
 
 
 @register(
@@ -581,15 +525,7 @@ def q_stream_tws_state_reader(spark, sf_dir):
         .select("user_id", "ts")
         .withWatermark("ts", "0 seconds")
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    if use_tws:
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-    try:
+    with conf_scope(spark, ROCKSDB_STATE if use_tws else {}):
         q = (
             stateful(sdf)
             .writeStream.format("memory")
@@ -608,12 +544,6 @@ def q_stream_tws_state_reader(spark, sf_dir):
                 "tws state-reader stream did not finish within 300s; "
                 "checkpoint state would be partial"
             )
-    finally:
-        if use_tws:
-            if prev_provider is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev_provider)
     reader = spark.read.format("statestore")
     if use_tws:
         reader = reader.option("stateVarName", "trail")
@@ -1528,9 +1458,7 @@ def q_stream_state_inspect(spark, sf_dir):
     )
     checkpoint = scratch_dir("ckpt", f"stinspect_{uuid.uuid4().hex[:10]}")
     shutil.rmtree(checkpoint, ignore_errors=True)
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": "4"}):
         query = (
             agg.writeStream.format("noop")
             .outputMode("complete")
@@ -1539,8 +1467,6 @@ def q_stream_state_inspect(spark, sf_dir):
             .start()
         )
         query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     state = spark.read.format("statestore").load(checkpoint)
     # value-struct field order follows the agg column order; rename
     # positionally so this does not depend on internal field naming
@@ -1847,24 +1773,10 @@ def q_stream_tws_initial_state(spark, sf_dir):
     stateful = (
         tws_bootstrap_totals if use_tws else pandas_state_bootstrap_totals
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    if use_tws:
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-    try:
+    with conf_scope(spark, ROCKSDB_STATE if use_tws else {}):
         return run_to_memory(
             stateful(sdf, boot),
             output_mode="update",
             shuffle_partitions=8,
             no_data_batches=False,
         )
-    finally:
-        if use_tws:
-            if prev_provider is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev_provider)

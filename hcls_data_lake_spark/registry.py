@@ -18,6 +18,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hcls_data_lake_spark.session import ensure_posture
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -31,33 +33,6 @@ class Query:
 
 REGISTRY: dict[str, Query] = {}
 
-_TUNED_SESSIONS: set[int] = set()
-
-
-def _ensure_tuned(spark: SparkSession) -> None:
-    """Apply the engine's performance posture to whichever session runs
-    the query (the driver supplies its own): AQE for runtime re-plan /
-    skew handling, Arrow for every Python boundary, right-sized shuffle
-    parallelism for the local-mode fixture scales (AQE coalescing heals
-    over-partitioning for batch, but streaming state stores don't AQE).
-    All runtime-settable confs — never touches static ones."""
-    key = id(spark)
-    if key in _TUNED_SESSIONS:
-        return
-    try:
-        defaults = {
-            "spark.sql.adaptive.enabled": "true",
-            "spark.sql.adaptive.coalescePartitions.enabled": "true",
-            "spark.sql.adaptive.skewJoin.enabled": "true",
-            "spark.sql.execution.arrow.pyspark.enabled": "true",
-            "spark.sql.shuffle.partitions": "32",
-        }
-        for k, v in defaults.items():
-            spark.conf.set(k, v)
-    except Exception:
-        pass  # a locked-down session still runs, just less tuned
-    _TUNED_SESSIONS.add(key)
-
 
 def register(name: str, oracle: str | None) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register a query with its oracle SQL (or None)."""
@@ -67,7 +42,7 @@ def register(name: str, oracle: str | None) -> Callable[[QueryFn], QueryFn]:
             raise ValueError(f"duplicate query name: {name}")
 
         def tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
-            _ensure_tuned(spark)
+            ensure_posture(spark)
             return fn(spark, sf_dir)
 
         tuned.__name__ = fn.__name__

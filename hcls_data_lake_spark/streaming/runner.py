@@ -10,18 +10,28 @@ endpoint.
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
-import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# serializes run_to_memory's session-global conf save/set/restore
-_CONF_LOCK = threading.Lock()
-
 from hcls_data_lake_spark.queries.common import scratch_dir, scratch_for
+from hcls_data_lake_spark.session import conf_scope
+
+log = logging.getLogger(__name__)
+
+# Session confs for a TransformWithState run (apply with conf_scope):
+# TWS requires multiple column families -> RocksDB state store (the
+# 100 TB state backend; HDFSBacked cannot host TWS state)
+ROCKSDB_STATE = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider"
+    ),
+}
 
 # Raw schema of the events parquet. Two fixture generations exist
 # (see queries/common.normalize_event_ts): TIMESTAMP(NANOS), which is
@@ -120,8 +130,8 @@ def _evict_state_providers(spark: SparkSession) -> None:
     try:
         jvm = spark._jvm
         jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    except Exception:  # noqa: BLE001 — hygiene only, never fail a run
-        pass
+    except Exception as exc:  # noqa: BLE001 — hygiene only, never fail a run
+        log.debug("state-store provider eviction skipped: %s", exc)
 
 
 def run_to_memory(
@@ -151,26 +161,17 @@ def run_to_memory(
     joins) produce their full result without it, and in a finite
     availableNow run the state it would evict is discarded at shutdown
     anyway — so skipping trades nothing but the one extra state-commit
-    round. Leave True for anything watermark-emitting.
-
-    The conf save/set/restore is guarded by a module lock: the confs
-    are session-global, and two overlapping un-serialized calls would
-    interleave save/restore and leave the session pinned at the wrong
-    shuffle parallelism for every later query."""
+    round. Leave True for anything watermark-emitting."""
     spark = sdf.sparkSession
     qname = name or f"mem_{uuid.uuid4().hex[:10]}"
     ckpt = scratch_dir("ckpt", qname)
     shutil.rmtree(ckpt, ignore_errors=True)
-    _CONF_LOCK.acquire()
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_ndb = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    try:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        if not no_data_batches:
-            spark.conf.set(
-                "spark.sql.streaming.noDataMicroBatches.enabled", "false"
-            )
+    confs = {}
+    if shuffle_partitions is not None:
+        confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    if not no_data_batches:
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    with conf_scope(spark, confs):
         query = (
             sdf.writeStream.format("memory")
             .queryName(qname)
@@ -180,12 +181,6 @@ def run_to_memory(
             .start()
         )
         query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_ndb
-        )
-        _CONF_LOCK.release()
     # spark.table analyzes eagerly, so the returned DataFrame keeps the
     # sink's materialized rows alive on its own; dropping the temp view
     # right away unregisters the sink from the catalog. Without the

@@ -54,6 +54,11 @@ def main() -> int:
             bad.append((name, (msg or "")[:200]))
         if (i + 1) % 40 == 0:
             print(f"progress {i + 1}/{len(qs)}", flush=True)
+    # the sibling session inherits the posture marker, so no query may
+    # have reset the hostile parallelism
+    sp = s.conf.get("spark.sql.shuffle.partitions")
+    if sp != "200":
+        bad.append(("<session>", f"shuffle.partitions reset to {sp}"))
     print(f"checked {len(qs)}")
     for name, msg in bad:
         print(f"FAIL {name}: {msg}")

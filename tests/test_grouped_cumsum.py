@@ -18,14 +18,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hcls_data_lake_spark.operators.ordered import grouped_cumsum
+from hcls_data_lake_spark.session import conf_scope
 
 
 @pytest.fixture(scope="module")
 def small_batches(spark):
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "97")
-    yield
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    with conf_scope(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "97"}):
+        yield
 
 
 def _data(spark, n=4000, seed=11):

@@ -5,9 +5,9 @@ and integer epoch arithmetic — this suite proves it by re-running the
 most timezone- and parallelism-sensitive queries through the oracle
 compare in a session deliberately configured like a foreign driver:
 America/New_York session time zone and 200 shuffle partitions.
-(`registry._ensure_tuned` resets runtime perf confs per session but
-deliberately never touches the time zone — correctness must not
-depend on it.)
+(The sibling session inherits the posture marker from `get_spark`, so
+the registry leaves both confs as set here; the registry never touches
+the time zone of any session — correctness must not depend on it.)
 """
 
 from __future__ import annotations
@@ -65,3 +65,5 @@ def test_hostile_session_parity(hostile_spark, sf_dir, name):
     oracles = registry.oracle_sql()
     ok, msg = compare(hostile_spark, sf_dir, name, qs[name], oracles.get(name))
     assert ok, f"{name} under hostile session: {msg}"
+    # the query ran at the hostile parallelism, not a registry reset
+    assert hostile_spark.conf.get("spark.sql.shuffle.partitions") == "200"

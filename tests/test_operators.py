@@ -1571,6 +1571,8 @@ def test_dynamic_partition_overwrite_leaves_other_partitions(spark, tmp_path):
     and in static mode the same write would have truncated them."""
     import os
 
+    from hcls_data_lake_spark.session import conf_scope
+
     path = str(tmp_path / "zone")
     df = spark.createDataFrame(
         [("a", 1), ("a", 2), ("b", 3), ("c", 4)], "k string, v int"
@@ -1582,14 +1584,10 @@ def test_dynamic_partition_overwrite_leaves_other_partitions(spark, tmp_path):
         return sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
 
     before_b, before_c = files_of("b"), files_of("c")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    with conf_scope(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         spark.createDataFrame([("a", 9)], "k string, v int").write.mode(
             "overwrite"
         ).partitionBy("k").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     assert files_of("b") == before_b and files_of("c") == before_c
     back = {
         (r.k, r.v) for r in spark.read.parquet(path).collect()

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from hcls_data_lake_spark import registry
 from hcls_data_lake_spark.queries.common import t
+from hcls_data_lake_spark.session import conf_scope
 
 
 from hcls_data_lake_spark.plans import lint, plan_of  # noqa: E402
@@ -106,14 +107,10 @@ def test_bucketed_join_is_exchange_free(spark, sf_dir):
     both sides too big to broadcast — by disabling broadcast, and pin
     that the fallback is the bucket-aligned SMJ, not a shuffle."""
     registry.queries()["q_join_bucketed"](spark, sf_dir).count()  # build layout
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with conf_scope(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         df = registry.queries()["q_join_bucketed"](spark, sf_dir)
         df.count()
         plan = plan_of(df)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "SortMergeJoin" in plan
     assert "Exchange" not in plan  # no shuffle AND no broadcast build
     assert "SelectedBucketsCount" in plan
@@ -137,13 +134,9 @@ def test_range_bin_join_is_hash_join_not_bnl(spark, sf_dir):
     plan must be a hash/sort-merge equi-join on the bin id with the
     BETWEEN as residual, never BNLJ. Pinned with broadcast disabled to
     model the at-scale condition (both sides fact-sized)."""
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with conf_scope(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         df = registry.queries()["q_join_range_bin"](spark, sf_dir)
         plan = plan_of(df)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
 
@@ -249,10 +242,7 @@ def test_aqe_splits_skewed_join_at_runtime(spark, sf_dir):
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.shuffle.partitions": "8",
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_scope(spark, confs):
         fact = spark.range(0, 300_000).select(
             F.when(F.col("id") % 20 != 0, 0)
             .otherwise(F.col("id") % 1000)
@@ -269,12 +259,6 @@ def test_aqe_splits_skewed_join_at_runtime(spark, sf_dir):
         final = j._jdf.queryExecution().executedPlan().toString()
         assert "isFinalPlan=true" in final
         assert "skew=true" in final, "AQE did not split the skewed join"
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_runtime_bloom_filter_prunes_fact_scan(spark, tmp_path):
@@ -299,10 +283,7 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark, tmp_path):
         "applicationSideScanSizeThreshold": "1KB",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_scope(spark, confs):
         fact = spark.read.parquet(f"{d}/fact")
         dim = spark.read.parquet(f"{d}/dim").filter(F.col("tag") == 3)
         j = fact.join(dim, "k")
@@ -310,12 +291,6 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark, tmp_path):
         plan = j._jdf.queryExecution().executedPlan().toString()
         assert "bloom_filter_agg" in plan, "no bloom filter was built"
         assert "might_contain" in plan, "bloom filter not applied to scan side"
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 # Queries whose plan INTENDS a BroadcastNestedLoopJoin: either the
@@ -918,13 +893,9 @@ def test_shuffle_hash_hint_avoids_sort(spark, sf_dir):
     Sort below it (the whole point vs sort-merge). Broadcast is
     disabled to model the at-scale condition where the hint matters —
     at fixture scale Catalyst would otherwise just broadcast."""
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with conf_scope(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         df = registry.queries()["q_join_shuffle_hash"](spark, sf_dir)
         plan = plan_of(df)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "ShuffledHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -993,12 +964,8 @@ def test_bucketed_multiway_fact_leg_is_exchange_free(spark, sf_dir):
     from hcls_data_lake_spark.registry import queries
 
     fn = queries()["q_join_multiway_bucketed"]
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with conf_scope(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         plan = plan_of(fn(spark, sf_dir), "formatted")
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert "SortMergeJoin" in plan
     lines = plan.splitlines()
     # walk the tree section: between each bucketed Scan and the SMJ

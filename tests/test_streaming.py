@@ -12,6 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from hcls_data_lake_spark.queries.common import scratch_dir
+from hcls_data_lake_spark.session import conf_scope
+from hcls_data_lake_spark.streaming.runner import ROCKSDB_STATE
 
 
 def _write_batch(spark, path, rows):
@@ -223,26 +225,11 @@ def test_transform_with_state_matches_batch_aggregate(spark, sf_dir):
     )
     from hcls_data_lake_spark.streaming.stateful import tws_running_totals
 
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    rocks = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    try:
-        prev = spark.conf.get(provider_key)
-    except Exception:
-        prev = None
-    spark.conf.set(provider_key, rocks)
-    try:
+    with conf_scope(spark, ROCKSDB_STATE):
         sdf = read_events_stream(spark, sf_dir).select("user_id", "value")
         out = run_to_memory(
             tws_running_totals(sdf), output_mode="update", shuffle_partitions=4
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
     from pyspark.sql import functions as F
 
     expected = (
@@ -281,20 +268,8 @@ def test_tws_list_state_topk_matches_fallback_and_batch(spark, sf_dir):
         tws_topk,
     )
 
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    rocks = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    try:
-        prev = spark.conf.get(provider_key)
-    except Exception:
-        prev = None
-
     def run(fn, set_rocks):
-        if set_rocks:
-            spark.conf.set(provider_key, rocks)
-        try:
+        with conf_scope(spark, ROCKSDB_STATE if set_rocks else {}):
             sdf = read_events_stream(spark, sf_dir).select(
                 "user_id", "value", "event_id"
             )
@@ -308,12 +283,6 @@ def test_tws_list_state_topk_matches_fallback_and_batch(spark, sf_dir):
                 (r.user_id, r.rnk): (r.value, r.event_id)
                 for r in out.collect()
             }
-        finally:
-            if set_rocks:
-                if prev is None:
-                    spark.conf.unset(provider_key)
-                else:
-                    spark.conf.set(provider_key, prev)
 
     got_tws = run(tws_topk, set_rocks=True)
     got_fallback = run(pandas_state_topk, set_rocks=False)
@@ -374,17 +343,7 @@ def test_rocksdb_state_store_matches_default_provider(spark, sf_dir):
             )
         )
 
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    rocks = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    try:
-        prev = spark.conf.get(provider_key)
-    except Exception:
-        prev = None
-    spark.conf.set(provider_key, rocks)
-    try:
+    with conf_scope(spark, ROCKSDB_STATE):
         rocks_out = run_to_memory(
             agg(read_events_stream(spark, sf_dir)),
             output_mode="append",
@@ -393,11 +352,6 @@ def test_rocksdb_state_store_matches_default_provider(spark, sf_dir):
         rocks_rows = sorted(
             (r.ws, r.event_type, r.n) for r in rocks_out.collect()
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
     default_out = run_to_memory(
         agg(read_events_stream(spark, sf_dir)),
         output_mode="append",
@@ -607,24 +561,13 @@ def test_tws_timer_boundary(spark, tmp_path):
         def close(self):
             pass
 
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    rocks = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    try:
-        prev = spark.conf.get(provider_key)
-    except Exception:
-        prev = None
-
     def run(src):
         sdf = (
             spark.readStream.schema("user_id long, ts timestamp")
             .parquet(src)
             .withWatermark("ts", "0 seconds")
         )
-        spark.conf.set(provider_key, rocks)
-        try:
+        with conf_scope(spark, ROCKSDB_STATE):
             out = run_to_memory(
                 sdf.groupBy("user_id").transformWithStateInPandas(
                     P(),
@@ -637,11 +580,6 @@ def test_tws_timer_boundary(spark, tmp_path):
                 no_data_batches=True,
             )
             return sorted((r.user_id, r.fired_ms) for r in out.collect())
-        finally:
-            if prev is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev)
 
     # EQUALITY fires: u1's only event at base -> expiry exactly
     # base_ms + 1,800,000 (base is minute-aligned); u2's event at
@@ -702,20 +640,8 @@ def test_tws_session_close_matches_fallback(spark, sf_dir):
         tws_session_close,
     )
 
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    rocks = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    try:
-        prev = spark.conf.get(provider_key)
-    except Exception:
-        prev = None
-
     def run(builder, set_rocks):
-        if set_rocks:
-            spark.conf.set(provider_key, rocks)
-        try:
+        with conf_scope(spark, ROCKSDB_STATE if set_rocks else {}):
             sdf = (
                 read_events_stream(spark, sf_dir)
                 .select("user_id", "ts")
@@ -728,11 +654,6 @@ def test_tws_session_close_matches_fallback(spark, sf_dir):
                 no_data_batches=True,
             )
             return sorted(tuple(r) for r in out.collect())
-        finally:
-            if prev is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev)
 
     tws_rows = run(tws_session_close, set_rocks=True)
     twin_rows = run(pandas_state_session_close, set_rocks=False)
@@ -839,20 +760,8 @@ def test_tws_map_state_matches_fallback(spark, sf_dir):
         tws_type_counts,
     )
 
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    rocks = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    try:
-        prev = spark.conf.get(provider_key)
-    except Exception:
-        prev = None
-
     def run(builder, set_rocks):
-        if set_rocks:
-            spark.conf.set(provider_key, rocks)
-        try:
+        with conf_scope(spark, ROCKSDB_STATE if set_rocks else {}):
             sdf = read_events_stream(spark, sf_dir).select(
                 "user_id", "event_type"
             )
@@ -862,11 +771,6 @@ def test_tws_map_state_matches_fallback(spark, sf_dir):
                 shuffle_partitions=4,
             )
             return sorted(tuple(r) for r in out.collect())
-        finally:
-            if prev is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev)
 
     tws_rows = run(tws_type_counts, set_rocks=True)
     twin_rows = run(pandas_state_type_counts, set_rocks=False)
@@ -919,16 +823,6 @@ def test_tws_session_close_multi_batch(spark, tmp_path):
             os.path.join(src, name),
         )
 
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    rocks = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    try:
-        prev = spark.conf.get(provider_key)
-    except Exception:
-        prev = None
-
     def run_once():
         # memory sink cannot recover from a checkpoint; foreachBatch
         # can — it is the resume-capable collection path
@@ -938,8 +832,7 @@ def test_tws_session_close_multi_batch(spark, tmp_path):
             .withWatermark("ts", "0 seconds")
         )
         rows = []
-        spark.conf.set(provider_key, rocks)
-        try:
+        with conf_scope(spark, ROCKSDB_STATE):
             run_foreach_batch(
                 tws_session_close(sdf),
                 lambda bdf, bid: rows.extend(
@@ -948,11 +841,6 @@ def test_tws_session_close_multi_batch(spark, tmp_path):
                 checkpoint=ckpt,
             )
             return sorted(rows)
-        finally:
-            if prev is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev)
 
     # run 1: u1 has a 2-event run, u2/u4 single events; nothing closes
     add_file("a.parquet", [(1, 0), (1, 600 * S), (2, 0), (4, 0)])
@@ -1003,20 +891,8 @@ def test_statestore_reader_tws_vs_fallback(spark, sf_dir, tmp_path):
         tws_session_close,
     )
 
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    rocks = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    try:
-        prev = spark.conf.get(provider_key)
-    except Exception:
-        prev = None
-
     def run_and_read(builder, ckpt, tws):
-        if tws:
-            spark.conf.set(provider_key, rocks)
-        try:
+        with conf_scope(spark, ROCKSDB_STATE if tws else {}):
             sdf = (
                 read_events_stream(spark, sf_dir)
                 .select("user_id", "ts")
@@ -1032,11 +908,6 @@ def test_statestore_reader_tws_vs_fallback(spark, sf_dir, tmp_path):
                 .start()
             )
             q.awaitTermination(300)
-        finally:
-            if prev is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev)
         reader = spark.read.format("statestore")
         vals = "value"
         if tws:
@@ -1098,16 +969,6 @@ def test_tws_initial_state_matches_fallback_and_batch(spark, sf_dir):
         tws_bootstrap_totals,
     )
 
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    rocks = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    try:
-        prev = spark.conf.get(provider_key)
-    except Exception:
-        prev = None
-
     # seed deliberately EXCLUDES user_id % 7 == 0 so some streamed keys
     # start cold — the absent-seed path must behave as zero state
     boot = (
@@ -1123,9 +984,7 @@ def test_tws_initial_state_matches_fallback_and_batch(spark, sf_dir):
     )
 
     def run(builder, set_rocks):
-        if set_rocks:
-            spark.conf.set(provider_key, rocks)
-        try:
+        with conf_scope(spark, ROCKSDB_STATE if set_rocks else {}):
             sdf = (
                 read_events_stream(spark, sf_dir)
                 .filter(F.col("event_id") % 2 == 1)
@@ -1143,11 +1002,6 @@ def test_tws_initial_state_matches_fallback_and_batch(spark, sf_dir):
                 no_data_batches=False,
             )
             return sorted(tuple(r) for r in out.collect())
-        finally:
-            if prev is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev)
 
     tws_rows = run(tws_bootstrap_totals, set_rocks=True)
     twin_rows = run(pandas_state_bootstrap_totals, set_rocks=False)
