@@ -15,7 +15,7 @@ doing — r2's driver run read q_agg_group 3.6x and q_dedup_near 1.7x
 over their steady state from exactly that noise. The min is the best
 unbiased estimate of the plan's cost; medians are reported alongside
 for dispersion. Single-run extended noise is filtered by the minima
-ledger (BENCH_solo_r5.json) rather than per-run reps.
+ledger (history/BENCH_solo_r5.json) rather than per-run reps.
 """
 
 from __future__ import annotations
@@ -362,7 +362,7 @@ def main() -> None:
     # the untimed warmup): at 200 entries a 3-rep extended pass puts
     # the whole run near half an hour, which risks any per-round wall
     # budget. Single-run spikes (the r3 q_join_salted_skew lesson)
-    # are filtered by the LEDGER instead — BENCH_solo_r5.json merges
+    # are filtered by the LEDGER instead — history/BENCH_solo_r5.json merges
     # per-query minima across many full runs, so one noisy reading
     # never becomes the committed reference. Override with
     # SPARK_GRAFT_BENCH_EXT_REPS for dedicated ledger runs.
@@ -406,7 +406,7 @@ def main() -> None:
     # then a compact headline-only JSON as the FINAL stdout line. The
     # driver keeps only the last 2000 chars of stdout, so the 240+
     # entry extended blob truncated away the headline keys in
-    # BENCH_r03..r10 ("parsed": null). The compact line carries the
+    # history/BENCH_r03..r10 ("parsed": null). The compact line carries the
     # headline set (14 queries + canaries), well under 2000 chars.
     print(
         json.dumps(

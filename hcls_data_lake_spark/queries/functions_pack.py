@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from hcls_data_lake_spark.queries.common import t
 from hcls_data_lake_spark.registry import register
+from hcls_data_lake_spark.session import conf_scope
 
 
 @register(
@@ -883,27 +884,26 @@ def q_fn_sql_scripting(spark, sf_dir):
     target — so the procedural and declarative spellings must agree
     bit-for-bit. Threshold arithmetic stays in exact BIGINT cents
     (integer-discipline: no float compare drift cross-engine)."""
-    # Parsing BEGIN...END blocks is gated by this conf; enabling it
-    # is side-effect-free for every other query shape.
-    spark.conf.set("spark.sql.scripting.enabled", "true")
     t(spark, sf_dir, "orders").createOrReplaceTempView("script_orders")
-    return spark.sql(
-        """
-        BEGIN
-          DECLARE thr_c BIGINT DEFAULT 640000;
-          DECLARE n BIGINT DEFAULT 0;
-          SET n = (SELECT count(*) FROM script_orders
-                   WHERE CAST(round(o_totalprice * 100) AS BIGINT) > thr_c);
-          WHILE n >= 100 DO
-            SET thr_c = thr_c * 2;
-            SET n = (SELECT count(*) FROM script_orders
-                     WHERE CAST(round(o_totalprice * 100) AS BIGINT)
-                           > thr_c);
-          END WHILE;
-          SELECT thr_c AS thr_cents, n AS n_above;
-        END
-        """
-    )
+    # BEGIN...END parses only under this conf, needed only in spark.sql
+    with conf_scope(spark, {"spark.sql.scripting.enabled": "true"}):
+        return spark.sql(
+            """
+            BEGIN
+              DECLARE thr_c BIGINT DEFAULT 640000;
+              DECLARE n BIGINT DEFAULT 0;
+              SET n = (SELECT count(*) FROM script_orders
+                       WHERE CAST(round(o_totalprice * 100) AS BIGINT) > thr_c);
+              WHILE n >= 100 DO
+                SET thr_c = thr_c * 2;
+                SET n = (SELECT count(*) FROM script_orders
+                         WHERE CAST(round(o_totalprice * 100) AS BIGINT)
+                               > thr_c);
+              END WHILE;
+              SELECT thr_c AS thr_cents, n AS n_above;
+            END
+            """
+        )
 
 
 @register(

@@ -525,7 +525,9 @@ def q_stream_tws_state_reader(spark, sf_dir):
         .select("user_id", "ts")
         .withWatermark("ts", "0 seconds")
     )
-    with conf_scope(spark, ROCKSDB_STATE if use_tws else {}):
+    # 8 state stores like its run_to_memory siblings (200 in a bare session)
+    confs = ROCKSDB_STATE if use_tws else {}
+    with conf_scope(spark, {**confs, "spark.sql.shuffle.partitions": "8"}):
         q = (
             stateful(sdf)
             .writeStream.format("memory")

@@ -97,14 +97,12 @@ def tws_running_totals(sdf: DataFrame, key: str = "user_id") -> DataFrame:
 
         def handleInputRows(self, key_tuple, rows, timer_values):
             # ONE state-server round-trip, not two: ValueState.get()
-            # returns None for an absent value (status 0, empty bytes —
-            # value_state_client.py), so the exists() probe is a wasted
-            # RPC per key per batch. At fixture scale the cut is noise
-            # (-0.9%, tools/profile_tws.py — the state dialogue is NOT
-            # the TWS floor; see BASELINE.md r8), but over a real
-            # socket each round-trip is a syscall + protobuf
-            # serialize/parse per key per batch, so the 3->2 RPC
-            # dialogue is the shape to keep.
+            # returns None for an absent value (value_state_client.py),
+            # so an exists() probe is a wasted RPC per key per batch.
+            # At fixture scale the cut measured -0.9% (the state dialogue
+            # is not the TWS floor; BASELINE.md r8), but over a real
+            # socket each round-trip costs a syscall and a protobuf
+            # serialize/parse per key per batch.
             got = self._state.get()
             n, total = got if got is not None else (0, 0.0)
             for pdf in rows:

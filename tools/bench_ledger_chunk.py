@@ -1,10 +1,10 @@
 """Chunked minima-ledger runner: times a SLICE of the bench inventory
 (headline + extended) with warmup + min-over-N reps and writes a
 partial {name: sec} JSON. Lets a full-ledger pass run as several
-bounded-wall-time invocations whose partials merge into
-BENCH_solo_r{N}.json (tools/merge_bench_ledger.py-style min-merge).
+bounded-wall-time invocations whose partials the gate min-merges:
 
     python tools/bench_ledger_chunk.py START END OUT.json [REPS]
+    python tools/check_bench_regressions.py --bench=A.json --bench=B.json
 """
 
 from __future__ import annotations

@@ -1,12 +1,18 @@
 """Programmatic bench-regression gate.
 
-Compares the current minima ledger (newest BENCH_solo_r*.json, or --bench=)
-against the committed per-query reference table in BASELINE.md
-("Committed extended-set reference") plus the committed headline
-table, and fails loudly on any entry slower than --factor (default
-1.3x) its committed reference. This institutionalizes the
-"zero extended-set regressions >1.3x" claim instead of re-deriving it
-ad hoc each round.
+Compares the current minima ledger against the committed per-query
+references in tools/bench_references.json ("references": {name: sec},
+"canaries": {name: sec}) and fails loudly on any entry slower than
+--factor (default 1.3x) its committed reference. This institutionalizes
+the "zero extended-set regressions >1.3x" claim instead of re-deriving
+it ad hoc each round.
+
+The ledger is the newest history/BENCH_solo_r{N}.json (largest N), or
+the --bench files. --bench may repeat: the gate then takes each query's
+minimum across the files (the cross-run minima convention of the
+ledgers). A file is either bench.py's full first stdout line (its
+"queries", "extended_queries" and "canaries") or a flat {name: sec}
+partial as tools/bench_ledger_chunk.py writes it.
 
 LOAD CALIBRATION: the references were measured on an unloaded host;
 a shared sandbox can run uniformly slower for hours, which would flag
@@ -31,71 +37,62 @@ query cannot move a median of dozens) and allows
 factor * committed * ambient + floor. The floor is printed with the
 calibration; --no-calibrate zeroes both.
 
-Usage: python tools/check_bench_regressions.py [--bench=PATH]
+Usage: python tools/check_bench_regressions.py [--bench=PATH ...]
        [--factor=1.3] [--no-calibrate]
+Run from the repository root.
 """
 
 from __future__ import annotations
 
+import glob
 import json
-import re
+import os
 import statistics
 import sys
 
-
-def committed_reference(baseline_md: str) -> dict[str, float]:
-    """Parse the two-column committed reference table."""
-    section = baseline_md.split("Committed extended-set reference")[1]
-    ref: dict[str, float] = {}
-    for row in re.finditer(
-        r"\|\s*(q_[a-z0-9_]+)\s*\|\s*([0-9.]+)\s*", section
-    ):
-        ref.setdefault(row.group(1), float(row.group(2)))
-    return ref
+REFERENCES = os.path.join(os.path.dirname(__file__), "bench_references.json")
+LEDGER_PREFIX = "history/BENCH_solo_r"
 
 
-def committed_canaries(baseline_md: str) -> dict[str, float]:
-    """Parse the committed canary minima out of BASELINE.md's
-    "Ambient canaries" bullets (r10, ADVICE: the minima were
-    previously hardcoded here AND stated in BASELINE.md — duplicated
-    constants that would silently drift apart at the next
-    re-baseline; BASELINE.md is the single source of truth)."""
-    section = baseline_md.split("Ambient canaries")[1]
-    return {
-        m.group(1): float(m.group(2))
-        for m in re.finditer(
-            r"`(q_bench_canary_[a-z_]+)`(?:(?!Committed min).)*?"
-            r"\*\*Committed min:?\s*([0-9.]+)\s*s",
-            section,
-            re.S,
-        )
-    }
+def newest_ledger() -> str:
+    """The committed BENCH_solo_r{N}.json with the largest round N."""
+    return max(
+        glob.glob(LEDGER_PREFIX + "*.json"),
+        key=lambda p: int(p[len(LEDGER_PREFIX):-len(".json")]),
+    )
+
+
+def ledger_times(doc: dict) -> dict[str, float]:
+    """{name: sec} of one ledger file, full bench.py line or flat."""
+    sections = ("queries", "extended_queries", "canaries")
+    if not any(k in doc for k in sections):
+        return doc
+    out: dict[str, float] = {}
+    for k in sections:
+        out.update(doc.get(k, {}))
+    return out
 
 
 def main() -> int:
-    import glob
-
-    ledgers = sorted(glob.glob("BENCH_solo_r*.json"))
-    bench_path = ledgers[-1] if ledgers else "BENCH_solo_r5.json"
+    args = sys.argv[1:]
+    bench_paths = [
+        a.split("=", 1)[1] for a in args if a.startswith("--bench=")
+    ] or [newest_ledger()]
     factor = 1.3
-    for a in sys.argv[1:]:
-        if a.startswith("--bench="):
-            bench_path = a.split("=", 1)[1]
+    for a in args:
         if a.startswith("--factor="):
             factor = float(a.split("=", 1)[1])
+    calibrate = "--no-calibrate" not in args
 
-    calibrate = "--no-calibrate" not in sys.argv[1:]
-
-    bench = json.load(open(bench_path))
-    current = dict(bench.get("queries", {}))
-    current.update(bench.get("extended_queries", {}))
-    # a ledger written directly by bench.py carries the canaries under
-    # their own "canaries" key (BASELINE.md's documented format);
-    # chunk-merged ledgers fold them into extended_queries — accept
-    # both so the canary diagnostic below never silently vanishes
-    current.update(bench.get("canaries", {}))
-    baseline_md = open("BASELINE.md").read()
-    ref = committed_reference(baseline_md)
+    current: dict[str, float] = {}
+    for path in bench_paths:
+        with open(path) as fh:
+            times = ledger_times(json.load(fh))
+        for name, sec in times.items():
+            current[name] = min(sec, current.get(name, sec))
+    with open(REFERENCES) as fh:
+        refs = json.load(fh)
+    ref = refs["references"]
 
     ratios = [
         current[n] / committed
@@ -141,14 +138,15 @@ def main() -> int:
     # canary high = host load).
     canary_bits = [
         f"{n.rsplit('_', 1)[-1]} {current[n] / c:.2f}x ({current[n]:.3f}s)"
-        for n, c in sorted(committed_canaries(baseline_md).items())
+        for n, c in sorted(refs["canaries"].items())
         if n in current
     ]
     if canary_bits:
         print("canaries vs committed: " + ", ".join(canary_bits))
     covered = sum(1 for n in ref if n in current)
     print(f"checked {covered}/{len(ref)} committed entries against"
-          f" {bench_path}; ambient-load median ratio {ambient:.2f};"
+          f" {', '.join(bench_paths)};"
+          f" ambient-load median ratio {ambient:.2f};"
           f" scheduling-floor shift {floor:.3f}s;"
           f" {len(regressions)} regression(s) > {factor}x calibrated"
           f" ({raw} raw)")

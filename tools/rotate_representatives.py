@@ -35,11 +35,14 @@ def main() -> None:
     names = re.findall(r'"(q_[a-z0-9_]+)"', block)
     header = block[: block.index('    "q_')]
 
+    # committed rounds live in history/, new ones land at the root
+    # (see __spark_entry__.py)
     latest: dict[str, int] = {}
-    for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
-        for name in json.load(open(f)):
-            latest[name] = rnd
+    for d in ("history", ""):
+        for f in glob.glob(os.path.join(REPO, d, "CORRECTNESS_r*.json")):
+            rnd = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
+            for name in json.load(open(f)):
+                latest[name] = max(rnd, latest.get(name, 0))
 
     pos = {n: i for i, n in enumerate(names)}
     known = set(names) | set(new_names)
