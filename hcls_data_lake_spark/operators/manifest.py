@@ -9,8 +9,9 @@ now" (the catalog's view). This module makes that split explicit for
 the Parquet lake, the way Delta/Iceberg do:
 
 - **Data files are immutable.** Every commit writes NEW parquet files
-  under ``<root>/data/commit-<v>/``; nothing is ever rewritten in
-  place.
+  under its own ``<root>/data/<dir>/`` (``commit`` uses
+  ``commit-<token>``, the streaming sink one dir per task); nothing
+  is ever rewritten in place.
 - **A version is a manifest**, ``<root>/_manifests/v<N>.json``: the
   explicit list of data files that make up the table at version N,
   plus the schema and commit mode. Readers plan from the manifest —
@@ -94,35 +95,41 @@ def _file_stats(path: str) -> dict:
     return {c: [mins[c], maxs[c]] for c in mins}
 
 
-def commit(
-    df,
+def _check_args(mode: str, meta: dict | None, txn_key: str | None) -> None:
+    if mode not in ("append", "overwrite"):
+        raise ValueError(f"mode must be append|overwrite, got {mode!r}")
+    if txn_key is not None and (meta is None or txn_key not in meta):
+        raise ValueError(f"txn_key {txn_key!r} not present in meta")
+
+
+def publish(
     root: str,
+    files: list[str],
+    schema,
     mode: str = "append",
     meta: dict | None = None,
     txn_key: str | None = None,
 ) -> int:
-    """Commit `df` as the next table version; returns the version.
+    """Publish already-written data `files` (table-relative paths under
+    ``data/<dir>/``) as the next table version; returns the version.
 
-    `mode="append"` makes the new version = previous files + this
-    commit's files; `mode="overwrite"` makes it exactly this commit's
-    files. The data write itself is a plain distributed parquet write
-    (executors write in parallel); only the metadata publish is
-    single-file.
+    `mode="append"` makes the new version = previous files + `files`;
+    `mode="overwrite"` makes it exactly `files`. `schema` is the
+    Spark ``StructType`` readers plan with.
 
-    ``txn_key`` names a key in ``meta`` that makes the commit
+    ``txn_key`` names a key in ``meta`` that makes the publish
     IDEMPOTENT (Delta's txn appId/version fence): on EVERY attempt of
     the publish loop — not just once up front — the committed set is
     re-checked, so a zombie driver and its restarted replacement
     racing the same batch cannot both land it: whichever loses the
     version race retries, re-checks, finds the key committed, and
-    returns 0 (the no-op sentinel; real versions start at 1)."""
+    returns 0 (the no-op sentinel; real versions start at 1). The
+    caller owns `files` and deletes them on 0."""
     import uuid
 
-    if mode not in ("append", "overwrite"):
-        raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-    if txn_key is not None and (meta is None or txn_key not in meta):
-        raise ValueError(f"txn_key {txn_key!r} not present in meta")
+    _check_args(mode, meta, txn_key)
     os.makedirs(_manifest_dir(root), exist_ok=True)
+    new_stats = {f: _file_stats(os.path.join(root, f)) for f in files}
     while True:
         prev = versions(root)
         version = (prev[-1] + 1) if prev else 1
@@ -130,47 +137,65 @@ def commit(
             root, txn_key
         ):
             return 0  # already durably committed (replay / lost fence race)
-        # The data dir carries a per-ATTEMPT token: two concurrent
-        # committers racing for the same version number write to
-        # DISJOINT directories, so the loser's cleanup (below) can
-        # never delete the winner's just-published files — sharing
-        # data/commit-<v> would let exactly that happen.
-        token = uuid.uuid4().hex[:8]
-        commit_name = f"commit-{version}-{token}"
-        data_dir = os.path.join(root, _DATA, commit_name)
-        df.write.mode("errorifexists").parquet(data_dir)
-        new_files = sorted(
-            os.path.join(_DATA, commit_name, f)
-            for f in os.listdir(data_dir)
-            if f.endswith(".parquet")
-        )
-        stats = {
-            f: _file_stats(os.path.join(root, f)) for f in new_files
-        }
-        files = new_files
+        all_files, stats = files, new_stats
         if mode == "append" and prev:
             prev_m = _load(root, prev[-1])
-            files = prev_m["files"] + new_files
-            stats = {**prev_m.get("stats", {}), **stats}
+            all_files = prev_m["files"] + files
+            stats = {**prev_m.get("stats", {}), **new_stats}
         manifest = {
             "version": version,
             "mode": mode,
-            "files": files,
+            "files": all_files,
             "stats": stats,
             "meta": meta or {},
-            "schema": df.schema.jsonValue(),
+            "schema": schema.jsonValue(),
         }
-        tmp = os.path.join(_manifest_dir(root), f".v{version}.json.tmp")
+        # per-attempt temp name: racing publishers never share one
+        tmp = os.path.join(
+            _manifest_dir(root), f".v{version}-{uuid.uuid4().hex[:8]}.tmp"
+        )
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
         final = os.path.join(_manifest_dir(root), f"v{version}.json")
         try:
             os.link(tmp, final)  # atomic publish; EEXIST = lost the race
-            os.unlink(tmp)
             return version
         except FileExistsError:
+            pass  # our files stay valid; retry against the new latest
+        finally:
             os.unlink(tmp)
-            shutil.rmtree(data_dir)  # our files are unreferenced; retry
+
+
+def commit(
+    df,
+    root: str,
+    mode: str = "append",
+    meta: dict | None = None,
+    txn_key: str | None = None,
+) -> int:
+    """Write `df` once into a fresh ``data/commit-<token>/`` and
+    `publish` it as the next version; returns the version, or 0 when
+    ``txn_key`` finds the batch already committed (see `publish`). The
+    data write is a plain distributed parquet write (executors write in
+    parallel); only the metadata publish is single-file. A replay is
+    caught before the write, so it writes nothing."""
+    import uuid
+
+    _check_args(mode, meta, txn_key)
+    if txn_key is not None and meta[txn_key] in committed_meta(root, txn_key):
+        return 0
+    commit_name = f"commit-{uuid.uuid4().hex[:8]}"
+    data_dir = os.path.join(root, _DATA, commit_name)
+    df.write.mode("errorifexists").parquet(data_dir)
+    files = sorted(
+        os.path.join(_DATA, commit_name, f)
+        for f in os.listdir(data_dir)
+        if f.endswith(".parquet")
+    )
+    version = publish(root, files, df.schema, mode, meta, txn_key)
+    if version == 0:
+        shutil.rmtree(data_dir)  # a concurrent replay won the fence
+    return version
 
 
 def read_version(

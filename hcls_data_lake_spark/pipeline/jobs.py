@@ -22,10 +22,13 @@ def _route_batch(batch_df: DataFrame, lake_root: str) -> None:
     are two separate write actions over the same parsed frame — pin it
     so the filter→prepare→parse chain runs once per batch, not once
     per zone. Delivery is AT-LEAST-ONCE under foreachBatch replay
-    (plain appends); when a zone needs exactly-once, route it through
-    streaming/manifest_sink.py, whose per-batch commit carries the
-    batch id and skips replays (see
-    tests/test_streaming.py::test_manifest_sink_exactly_once)."""
+    (plain appends). A zone that needs exactly-once commits each batch
+    as a manifest version fenced on its batch id: stream into
+    ``format("manifestsink")`` (sources/manifest_sink.py), or call
+    ``manifest.commit(df, root, meta={"batch_id": id},
+    txn_key="batch_id")`` inside foreachBatch; a replayed id then
+    writes nothing (see
+    tests/test_manifest.py::test_manifest_sink_is_exactly_once_under_replay)."""
     from hcls_data_lake_spark.pipeline.staging import parse, prepare, route
     from hcls_data_lake_spark.pipeline.ingest import subscription_filter
 

@@ -32,11 +32,12 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 
     Two fixture generations exist: TIMESTAMP(NANOS), which Spark's
     vectorized reader surfaces as raw long nanos under
-    spark.sql.legacy.parquet.nanosAsLong, and TIMESTAMP(MICROS) NTZ,
-    which reads natively as timestamp_ntz. Both paths use exact integer
-    microsecond arithmetic (timestampadd/timestampdiff against the NTZ
-    epoch) so the result is bit-identical to DuckDB's reading of the
-    same parquet and independent of the session time zone. `ts_ns`
+    spark.sql.legacy.parquet.nanosAsLong (set by session.posture), and
+    TIMESTAMP(MICROS) NTZ, which reads natively as timestamp_ntz. Both
+    paths use exact integer microsecond arithmetic
+    (timestampadd/timestampdiff against the NTZ epoch) so the result is
+    bit-identical to DuckDB's reading of the same parquet and
+    independent of the session time zone. `ts_ns`
     matches DuckDB `epoch_ns(ts)` on either generation.
 
     Any OTHER physical type is an error, not a fallthrough: a plain
@@ -70,7 +71,6 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 def events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Load `events` with `ts` as timestamp_ntz at microsecond precision
     plus a tz-free `ts_ns` bigint (see normalize_event_ts)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return normalize_event_ts(load_table(spark, sf_dir, "events"))
 
 

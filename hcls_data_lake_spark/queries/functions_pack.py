@@ -977,8 +977,8 @@ def q_fn_time(spark, sf_dir):
     Since queries() callables return unexecuted plans, the flag must
     stay on for the plan's lifetime. It is purely PERMISSIVE — enabling
     a type admits new plans but cannot change the semantics of any plan
-    that doesn't use TIME — the same one-way discipline as
-    common.events()'s nanosAsLong."""
+    that doesn't use TIME — like nanosAsLong, which the session
+    posture sets for the same reason (read after any scope closes)."""
     from hcls_data_lake_spark.queries.common import events
 
     spark.conf.set("spark.sql.timeType.enabled", "true")

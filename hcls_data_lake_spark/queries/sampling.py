@@ -286,11 +286,11 @@ def q_sample_token_budget(spark, sf_dir):
     deterministic and engine-identical).
 
     Scale shape (r13): n_tok = size(split(text,' ')) ≥ 1 for non-null
-    text, so cum_tok ≥ rank along the admission order — no row past
-    rank B (the budget, session.TOKEN_BUDGET = 3000) can ever satisfy
-    cum_tok ≤ B. A row_number ≤ B pre-filter is therefore result-free,
-    and Spark pushes it below the exchange as WindowGroupLimit(Partial)
-    (the session posture sets windowGroupLimitThreshold from the same
+    text (a null text raises), so cum_tok ≥ rank along the admission
+    order — no row past rank B (the budget, session.TOKEN_BUDGET =
+    3000) can ever satisfy cum_tok ≤ B. A row_number ≤ B pre-filter is
+    therefore result-free, and Spark pushes it below the exchange as
+    WindowGroupLimit(Partial) (the session posture sets windowGroupLimitThreshold from the same
     constant, so the push survives a budget change): each map task
     ships at most B rows per source instead of the whole fact, and the
     cumsum window's input is budget-bounded (≤B rows/source), not
@@ -299,11 +299,20 @@ def q_sample_token_budget(spark, sf_dir):
     surviving row (every earlier row in the order has a smaller rank
     and is kept too)."""
     d = t(spark, sf_dir, "documents")
+    # the rank prune below is exact only while every n_tok >= 1: a null
+    # text fails the query instead of silently mis-pruning
+    n_tok = F.when(
+        F.col("text").isNull(),
+        F.raise_error(
+            F.lit("q_sample_token_budget: null documents.text breaks the"
+                  " rk <= TOKEN_BUDGET prune (needs n_tok >= 1)")
+        ),
+    ).otherwise(F.size(F.split("text", " ")))
     toks = d.select(
         "doc_id",
         "source",
         "n_chars",
-        F.size(F.split("text", " ")).cast("bigint").alias("n_tok"),
+        n_tok.cast("bigint").alias("n_tok"),
     )
     wo = Window.partitionBy("source").orderBy(
         F.col("n_chars").desc(), "doc_id"

@@ -925,13 +925,14 @@ def q_sink_pystream_manifest(spark, sf_dir):
     manifest-committed zone writer — executors stream PyArrow
     RecordBatches straight to uniquely-named parquet part files (no
     per-row Python, no pandas), the driver publishes each
-    micro-batch's manifest atomically in commit(), and readers list
-    MANIFESTS, never the data directory — uncommitted files are
-    invisible by construction (the object-store commit kernel; A10's
-    put-then-catalog two-step as Spark's write/commit contract,
-    reference write_lambda.py). The query proves the full round trip:
-    stream the big-purchase slice through the sink, read back ONLY
-    manifest-listed files, aggregate, and hash-match against the
+    micro-batch as one table version (operators/manifest.publish) in
+    commit(), and readers plan from the MANIFEST, never the data
+    directory — uncommitted files are invisible by construction (the
+    object-store commit kernel; A10's put-then-catalog two-step as
+    Spark's write/commit contract, reference write_lambda.py). The
+    query proves the full round trip: stream the big-purchase slice
+    through the sink, read back the latest version with
+    manifest.read_version, aggregate, and hash-match against the
     events table directly — any dropped batch, duplicated part, or
     phantom uncommitted file breaks the match. Value arithmetic stays
     in exact BIGINT cents. Crash-safety of the protocol (abort,
@@ -940,8 +941,8 @@ def q_sink_pystream_manifest(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
+    from hcls_data_lake_spark.operators import manifest
     from hcls_data_lake_spark.sources.manifest_sink import (
-        committed_files,
         register_manifest_sink,
     )
     from hcls_data_lake_spark.streaming.runner import read_events_stream
@@ -971,16 +972,16 @@ def q_sink_pystream_manifest(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    # False return = timeout with the query still running; the manifest
-    # would then list only the batches committed so far — fail loudly
-    # rather than aggregate a partial zone
+    # False return = timeout with the query still running; the latest
+    # version would then hold only the batches committed so far — fail
+    # loudly rather than aggregate a partial zone
     if not q.awaitTermination(120):
         q.stop()
         raise TimeoutError(
             "manifest-sink stream did not finish within 120s; "
-            "committed_files would be partial"
+            "the latest version would be partial"
         )
-    back = spark.read.parquet(*committed_files(zone))
+    back = manifest.read_version(spark, zone)
     return back.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_big"),
         F.sum("value_cents").cast("bigint").alias("cents"),

@@ -59,64 +59,13 @@ def register(name: str, oracle: str | None) -> Callable[[QueryFn], QueryFn]:
 # correctness sweep — then cover every family instead of exhausting the
 # budget inside whichever module happens to import first.
 _FAMILY_REPRESENTATIVES = [
-    # -- PLAN-CHANGED-FIRST (r13 rotation, VERDICT r12 ask #4): the
-    # driver's oracle must certify the optimizer's rewrites, so slots
-    # 1-38 are every plan-changed query of the r12+r13 optimization
-    # rounds — the r13 window-family/hl7/bpe/recall rewrites first (no
-    # driver row on their NEW plans yet), then the 27 r12 ledger
-    # entries plus q_agg_entropy; the remainder is the standing
-    # stalest-driver-row-first order. Regenerate each round with
+    # -- STALEST-FIRST rotation: the r13 plan-changed queries all have
+    # CORRECTNESS rows on their new plans (history/CORRECTNESS_r13.json),
+    # so the order is now oldest latest-CORRECTNESS-row first, and the
+    # 14 names with no oracle SQL come last (a sampled prefix cannot
+    # diff them).
+    # Regenerate each round with
     # tools/rotate_representatives.py <new names...>.
-    "q_agg_weighted_median",
-    "q_agg_percentile_exact",
-    "q_win_median",
-    "q_ts_concurrency",
-    "q_sample_token_budget",
-    "q_hl7_rrd_reconcile",
-    "q_hl7_ack_reconcile",
-    "q_hl7_qbp_reconcile",
-    "q_text_bpe_apply",
-    "q_embed_recall_tuned",
-    "q_dedup_pipeline_e2e_full",
-    "q_dedup_simhash_join",
-    "q_sketch_hll_intersect",
-    "q_analytics_attribution",
-    "q_sim_ann_pq_exact_regime",
-    "q_sim_ann_ivf_exact_regime",
-    "q_sim_ann_lsh_exact_regime",
-    "q_sim_ann_ivfpq_exact_regime",
-    "q_text_bm25",
-    "q_text_pmi",
-    "q_text_lm_score",
-    "q_dedup_pipeline_e2e",
-    "q_sim_topk",
-    "q_dedup_minhash_est",
-    "q_graph_assortativity",
-    "q_sim_ann_multiprobe",
-    "q_embed_recall_audit",
-    "q_sketch_countmin",
-    "q_sim_ann_pq",
-    "q_dedup_lsh_bands",
-    "q_sketch_bloom_md5",
-    "q_ts_decompose",
-    "q_sim_ann_ivf",
-    "q_sim_ann_ivfpq",
-    "q_ts_mad_outliers",
-    "q_embed_knn_graph",
-    "q_sim_ann_lsh",
-    "q_agg_entropy",
-    "q_set_except",
-    "q_subquery_correlated",
-    "q_filter_conj",
-    "q_project_case",
-    "q_fn_string",
-    "q_agg_approx_distinct",
-    "q_hl7_typed_oru",
-    "q_udtf_explode_segments",
-    "q_subquery_scalar",
-    "q_subquery_in",
-    "q_subquery_not_exists",
-    "q_subquery_waiting_supplier",
     "q_subquery_idle_customers",
     "q_subquery_having",
     "q_win_percent",
@@ -133,7 +82,6 @@ _FAMILY_REPRESENTATIVES = [
     "q_scan_schema_evolution",
     "q_ts_ohlc",
     "q_ts_dedup_consecutive",
-    "q_graph_pagerank",
     "q_graph_triangles",
     "q_text_langid",
     "q_text_fingerprint",
@@ -304,11 +252,6 @@ _FAMILY_REPRESENTATIVES = [
     "q_analytics_big_orders",
     "q_pipeline_compact",
     "q_pipeline_expire",
-    "q_agg_hll_sketch",
-    "q_agg_approx_quantile",
-    "q_dedup_minhash_lsh",
-    "q_dedup_simhash",
-    "q_multimodal_frames",
     "q_agg_gini",
     "q_analytics_abc",
     "q_privacy_t_closeness",
@@ -320,7 +263,6 @@ _FAMILY_REPRESENTATIVES = [
     "q_ts_changepoint",
     "q_pipeline_ingest_encoding",
     "q_pipeline_versions",
-    "q_embed_recall_ivfpq",
     "q_hl7_typed_vxu",
     "q_join_multiway_bucketed",
     "q_fn_sql_scripting",
@@ -331,8 +273,6 @@ _FAMILY_REPRESENTATIVES = [
     "q_stream_tws_mapstate",
     "q_decontaminate_near",
     "q_stream_tws_state_reader",
-    "q_multimodal_binary",
-    "q_embed_pca_project",
     "q_hl7_typed_rde",
     "q_bench_canary_floor",
     "q_bench_canary_scan",
@@ -499,7 +439,68 @@ _FAMILY_REPRESENTATIVES = [
     "q_win_rank",
     "q_topk_per_group",
     "q_sort_limit",
+    "q_agg_weighted_median",
+    "q_agg_percentile_exact",
+    "q_win_median",
+    "q_ts_concurrency",
+    "q_sample_token_budget",
+    "q_hl7_rrd_reconcile",
+    "q_hl7_ack_reconcile",
+    "q_hl7_qbp_reconcile",
+    "q_text_bpe_apply",
+    "q_embed_recall_tuned",
+    "q_dedup_pipeline_e2e_full",
+    "q_dedup_simhash_join",
+    "q_sketch_hll_intersect",
+    "q_analytics_attribution",
+    "q_sim_ann_pq_exact_regime",
+    "q_sim_ann_ivf_exact_regime",
+    "q_sim_ann_lsh_exact_regime",
+    "q_sim_ann_ivfpq_exact_regime",
+    "q_text_bm25",
+    "q_text_pmi",
+    "q_text_lm_score",
+    "q_dedup_pipeline_e2e",
+    "q_sim_topk",
+    "q_dedup_minhash_est",
+    "q_graph_assortativity",
+    "q_sim_ann_multiprobe",
+    "q_embed_recall_audit",
+    "q_sketch_countmin",
+    "q_dedup_lsh_bands",
+    "q_sketch_bloom_md5",
+    "q_ts_decompose",
+    "q_ts_mad_outliers",
+    "q_embed_knn_graph",
+    "q_agg_entropy",
+    "q_set_except",
+    "q_subquery_correlated",
+    "q_filter_conj",
+    "q_project_case",
+    "q_fn_string",
+    "q_hl7_typed_oru",
+    "q_udtf_explode_segments",
+    "q_subquery_scalar",
+    "q_subquery_in",
+    "q_subquery_not_exists",
+    "q_subquery_waiting_supplier",
+    "q_graph_pagerank",
+    "q_agg_hll_sketch",
+    "q_agg_approx_quantile",
+    "q_dedup_minhash_lsh",
+    "q_dedup_simhash",
+    "q_multimodal_frames",
+    "q_embed_recall_ivfpq",
+    "q_multimodal_binary",
+    "q_embed_pca_project",
+    "q_sim_ann_pq",
+    "q_sim_ann_ivf",
+    "q_sim_ann_ivfpq",
+    "q_sim_ann_lsh",
+    "q_agg_approx_distinct",
 ]
+
+
 
 
 

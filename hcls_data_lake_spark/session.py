@@ -51,6 +51,12 @@ def posture(parallelism: int | str) -> dict[str, str]:
         # scale-independent (it strictly reduces shuffled rows whenever
         # it fires), so raising the cap is safe for every other query.
         "spark.sql.optimizer.windowGroupLimitThreshold": str(TOKEN_BUDGET),
+        # The older events fixture generation stores TIMESTAMP(NANOS),
+        # which Spark reads only as raw long nanos under this flag
+        # (queries/common.normalize_event_ts). It is read when the scan
+        # is planned, at the caller's action, so no conf_scope around
+        # query construction can hold it: the posture decides it.
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
         POSTURE_MARKER: "1",
     }
 

@@ -9,24 +9,31 @@ Mechanics, and why they are the 100 TB shape:
 - ``write`` runs per PARTITION on executors and receives PyArrow
   RecordBatches — the Arrow-native writer variant, so bytes flow
   source->sink with no per-row Python and no pandas detour. Each task
-  writes one uniquely-named part file (never a rename-in-place) and
-  returns only its (path, rowcount) as the commit message.
+  writes one part file into its own fresh ``data/<dir>/`` (never a
+  rename-in-place) and returns only its (path, rowcount) as the commit
+  message.
 - ``commit`` runs once per micro-batch on the DRIVER, after every
-  task succeeded, and publishes the batch manifest ATOMICALLY
-  (tmp-file + os.replace). Readers list manifests, never the data
-  directory — uncommitted part files are invisible by construction,
-  which is exactly the manifest trick object stores need (S3 has no
-  atomic multi-file commit; this is the Iceberg/Delta commit kernel
-  in one page).
-- ``abort`` deletes the orphaned part files of a failed batch; a
-  crash between write and commit leaves garbage data files but NO
-  manifest entry, so the zone stays consistent.
+  task succeeded, and publishes the batch as one table version through
+  ``operators.manifest.publish`` — the same ``v<N>.json`` format,
+  atomic publish and ``batch_id`` replay fence as ``manifest.commit``,
+  so ``read_version``, time travel, ``diff_versions`` and ``vacuum``
+  all work on a sink-written zone. Readers plan from manifests, never
+  the data directory — uncommitted part files are invisible by
+  construction, which is exactly the manifest trick object stores
+  need (S3 has no atomic multi-file commit).
+- A batch id that is already committed (a replay after a driver
+  crash) publishes nothing and its parts are deleted; ``abort`` deletes
+  the parts of a failed batch. A crash between write and commit leaves
+  garbage data files but NO manifest entry, so the zone stays
+  consistent and ``vacuum`` reclaims them.
+- ``outputMode("complete")`` makes Spark pass ``overwrite=True``; each
+  batch then replaces the table instead of appending to it.
 """
 
 from __future__ import annotations
 
-import json
 import os
+import shutil
 import uuid
 from dataclasses import dataclass
 
@@ -39,7 +46,8 @@ from pyspark.sql.datasource import (
 
 @dataclass
 class PartMessage(WriterCommitMessage):
-    """Executor -> driver commit message: one written part file."""
+    """Executor -> driver commit message: one written part file, as a
+    table-relative path."""
 
     path: str
     rows: int
@@ -51,12 +59,14 @@ class ManifestSinkDataSource(DataSource):
         return "manifestsink"
 
     def streamWriter(self, schema, overwrite):
-        return ManifestStreamWriter(self.options["path"])
+        return ManifestStreamWriter(self.options["path"], schema, overwrite)
 
 
 class ManifestStreamWriter(DataSourceStreamArrowWriter):
-    def __init__(self, path: str) -> None:
+    def __init__(self, path: str, schema, overwrite: bool) -> None:
         self.path = path
+        self.schema = schema
+        self.overwrite = overwrite
 
     def write(self, iterator):
         import pyarrow as pa
@@ -66,60 +76,33 @@ class ManifestStreamWriter(DataSourceStreamArrowWriter):
         if not batches:
             return PartMessage("", 0)
         tbl = pa.Table.from_batches(batches)
-        os.makedirs(os.path.join(self.path, "data"), exist_ok=True)
-        fname = os.path.join(
-            self.path, "data", f"part-{uuid.uuid4().hex}.parquet"
-        )
-        pq.write_table(tbl, fname)
-        return PartMessage(fname, tbl.num_rows)
+        rel = os.path.join("data", f"part-{uuid.uuid4().hex}", "part.parquet")
+        os.makedirs(os.path.dirname(os.path.join(self.path, rel)))
+        pq.write_table(tbl, os.path.join(self.path, rel))
+        return PartMessage(rel, tbl.num_rows)
 
     def commit(self, messages, batchId: int) -> None:
-        parts = [
-            {"path": m.path, "rows": m.rows}
-            for m in messages
-            if m is not None and m.rows > 0
-        ]
-        mdir = os.path.join(self.path, "_manifests")
-        os.makedirs(mdir, exist_ok=True)
-        tmp = os.path.join(mdir, f".batch-{batchId}.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump({"batchId": batchId, "parts": parts}, f)
-        # os.replace is atomic on POSIX: a manifest either exists
-        # complete or not at all
-        os.replace(tmp, os.path.join(mdir, f"batch-{batchId}.json"))
+        from hcls_data_lake_spark.operators import manifest
+
+        parts = sorted(m.path for m in messages if m is not None and m.rows > 0)
+        version = manifest.publish(
+            self.path,
+            parts,
+            self.schema,
+            "overwrite" if self.overwrite else "append",
+            meta={"batch_id": batchId},
+            txn_key="batch_id",
+        )
+        if version == 0:  # replayed batch: already durable, exactly-once
+            self.abort(messages, batchId)
 
     def abort(self, messages, batchId: int) -> None:
         for m in messages:
             if m is not None and m.path:
-                try:
-                    os.remove(m.path)
-                except OSError:
-                    pass
+                part_dir = os.path.dirname(os.path.join(self.path, m.path))
+                shutil.rmtree(part_dir, ignore_errors=True)
 
 
 def register_manifest_sink(spark) -> None:
     """Idempotent registration of the manifestsink format."""
     spark.dataSource.register(ManifestSinkDataSource)
-
-
-def committed_files(zone: str) -> list[str]:
-    """The reader half of the protocol: part files listed by COMMITTED
-    manifests only, in batch order."""
-    mdir = os.path.join(zone, "_manifests")
-    if not os.path.isdir(mdir):
-        return []
-    manifests = [
-        f
-        for f in os.listdir(mdir)
-        if f.startswith("batch-") and f.endswith(".json")
-    ]
-    # numeric batch order, NOT lexicographic: "batch-10.json" sorts
-    # before "batch-2.json" as a string, which would break any
-    # ordering-dependent consumer (e.g. an incremental reader tailing
-    # from its last-seen batch id) at the 10th micro-batch
-    manifests.sort(key=lambda f: int(f[len("batch-") : -len(".json")]))
-    files: list[str] = []
-    for fname in manifests:
-        with open(os.path.join(mdir, fname)) as f:
-            files.extend(p["path"] for p in json.load(f)["parts"])
-    return files

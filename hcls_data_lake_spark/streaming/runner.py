@@ -80,7 +80,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The file source needs a directory, so the fixture file is exposed
     through a symlinked landing dir (what a real lake zone is)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     landing = scratch_for(sf_dir, "events_landing")
     os.makedirs(landing, exist_ok=True)
     link = os.path.join(landing, "events.parquet")

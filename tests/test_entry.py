@@ -42,3 +42,10 @@ def test_sql_text_surface(spark, sf_dir):
     # events view has the repaired timestamp type
     t = dict(spark.sql("SELECT * FROM events").dtypes)["ts"]
     assert t.startswith("timestamp")
+
+
+def test_sampled_prefix_has_oracles():
+    """Correctness harnesses sample the first 50 names; each must have
+    oracle SQL to diff against."""
+    oracles = entrymod.oracle_sql()
+    assert [n for n in list(entrymod.queries())[:50] if n not in oracles] == []

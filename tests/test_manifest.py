@@ -127,60 +127,114 @@ def test_stats_pruning_skips_files_but_not_rows(spark, tmp_path):
     assert len(allf.inputFiles()) == 3
 
 
-def test_manifest_sink_is_exactly_once_under_replay(spark, sf_dir, tmp_path):
-    """Stream the events table into a manifest table via foreachBatch,
-    then re-invoke the sink with an already-committed batch_id (what a
-    post-crash replay does): version count must not move and the table
-    must equal the batch source exactly once."""
-    import shutil
-    import uuid
-
-    from hcls_data_lake_spark.queries.common import events
-    from hcls_data_lake_spark.streaming.manifest_sink import manifest_sink
+def _stream_events_to_sink(spark, sf_dir, root, ckpt):
+    from hcls_data_lake_spark.sources.manifest_sink import (
+        register_manifest_sink,
+    )
     from hcls_data_lake_spark.streaming.runner import read_events_stream
 
-    root = str(tmp_path / "lake")
-    sink = manifest_sink(root)
-    ckpt = str(tmp_path / f"ckpt_{uuid.uuid4().hex[:8]}")
+    register_manifest_sink(spark)
     q = (
         read_events_stream(spark, sf_dir)
         .select("event_id", "event_type", "value")
-        .writeStream.foreachBatch(sink)
+        .writeStream.format("manifestsink")
+        .option("path", root)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    assert q.awaitTermination(120), "manifest-sink stream did not finish"
+
+
+def _data_files(root):
+    out = set()
+    for d, _, files in os.walk(os.path.join(root, "data")):
+        out.update(os.path.join(d, f) for f in files)
+    return out
+
+
+def test_manifest_sink_is_exactly_once_under_replay(spark, sf_dir, tmp_path):
+    """Stream the events table through the manifestsink format, then
+    replay every committed batch id through a FRESH writer (what a
+    restarted driver re-running its last batches does): each replay's
+    write lands parts on disk, but its commit must publish nothing and
+    delete those parts — version count, row count and the data files
+    stay exactly as the first delivery left them."""
+    import pyarrow as pa
+
+    from hcls_data_lake_spark.queries.common import events
+    from hcls_data_lake_spark.sources.manifest_sink import (
+        ManifestStreamWriter,
+    )
+
+    root = str(tmp_path / "lake")
+    _stream_events_to_sink(spark, sf_dir, root, str(tmp_path / "ckpt"))
     vs = manifest.versions(root)
     assert vs, "no batch committed"
     n_expected = events(spark, sf_dir).count()
-    assert manifest.read_version(spark, root).count() == n_expected
-    # replay every committed batch id — all must be skipped
-    replay_df = events(spark, sf_dir).select(
-        "event_id", "event_type", "value"
+    head = manifest.read_version(spark, root)
+    assert head.count() == n_expected
+    files_before = _data_files(root)
+
+    replay = pa.table(
+        {
+            "event_id": pa.array([1, 2], pa.int64()),
+            "event_type": pa.array(["a", "b"]),
+            "value": pa.array([1.0, 2.0]),
+        }
     )
     for bid in sorted(manifest.committed_meta(root, "batch_id")):
-        sink(replay_df, bid)
+        zombie = ManifestStreamWriter(root, head.schema, False)
+        msg = zombie.write(iter(replay.to_batches()))
+        assert os.path.exists(os.path.join(root, msg.path))
+        zombie.commit([msg], bid)
+        assert not os.path.exists(os.path.join(root, msg.path))
     assert manifest.versions(root) == vs
     assert manifest.read_version(spark, root).count() == n_expected
-    # zombie fence: a FRESH sink closure (stale driver whose cached
-    # committed-set predates these commits is the worst case — here it
-    # has no cache at all) must also refuse to re-commit, because the
-    # batch_id txn check runs INSIDE commit's publish loop
-    zombie = manifest_sink(root)
-    for bid in sorted(manifest.committed_meta(root, "batch_id")):
-        zombie(replay_df, bid)
-    assert manifest.versions(root) == vs
-    # and commit() itself fences when called directly with txn_key
+    assert _data_files(root) == files_before
+
+    # and commit() itself fences when called directly with txn_key,
+    # before it writes anything
     bid0 = sorted(manifest.committed_meta(root, "batch_id"))[0]
     assert (
         manifest.commit(
-            replay_df, root, meta={"batch_id": bid0}, txn_key="batch_id"
+            spark.range(3).toDF("event_id"),
+            root,
+            meta={"batch_id": bid0},
+            txn_key="batch_id",
         )
         == 0
     )
     assert manifest.versions(root) == vs
-    shutil.rmtree(ckpt, ignore_errors=True)
+    assert _data_files(root) == files_before
+
+
+def test_vacuum_on_sink_written_table(spark, sf_dir, tmp_path):
+    """vacuum walks the sink's per-task data/<dir>/ layout: on a
+    sink-written table it deletes only the parts no retained manifest
+    references (a crashed batch's orphan), and the table still reads
+    whole afterwards."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hcls_data_lake_spark.queries.common import events
+
+    root = str(tmp_path / "lake")
+    _stream_events_to_sink(spark, sf_dir, root, str(tmp_path / "ckpt"))
+    orphan = os.path.join("data", "part-orphan", "part.parquet")
+    os.makedirs(os.path.join(root, "data", "part-orphan"))
+    pq.write_table(
+        pa.table({"event_id": pa.array([99], pa.int64())}),
+        os.path.join(root, orphan),
+    )
+    referenced = set(manifest._load(root, manifest.versions(root)[-1])["files"])
+    assert manifest.vacuum(root, keep_last=1, min_age_s=0) == [orphan]
+    assert not os.path.exists(os.path.join(root, "data", "part-orphan"))
+    assert all(os.path.exists(os.path.join(root, f)) for f in referenced)
+    assert (
+        manifest.read_version(spark, root).count()
+        == events(spark, sf_dir).count()
+    )
 
 
 def test_read_commit_delta_returns_only_that_commits_rows(spark, tmp_path):
@@ -209,21 +263,14 @@ def test_read_commit_delta_returns_only_that_commits_rows(spark, tmp_path):
         manifest.read_commit_delta(spark, root, 9)
 
 
-def test_committed_files_numeric_batch_order(tmp_path):
-    """committed_files must order manifests by NUMERIC batch id —
-    lexicographic listing puts batch-10 before batch-2, breaking the
-    'in batch order' contract at the 10th micro-batch for any
-    ordering-dependent consumer (incremental readers tailing from a
-    last-seen batch id)."""
-    import json
-
-    from hcls_data_lake_spark.sources.manifest_sink import committed_files
-
-    zone = tmp_path / "zone"
-    mdir = zone / "_manifests"
+def test_versions_numeric_order(tmp_path):
+    """versions() must order manifests by NUMERIC version — a
+    lexicographic listing puts v10 before v2, which would make
+    read_version's HEAD and append composition pick the wrong manifest
+    from the 10th commit on."""
+    mdir = tmp_path / "tbl" / "_manifests"
     mdir.mkdir(parents=True)
-    for bid in (0, 1, 2, 10, 11):
-        (mdir / f"batch-{bid}.json").write_text(
-            json.dumps({"batchId": bid, "parts": [{"path": f"p{bid}"}]})
-        )
-    assert committed_files(str(zone)) == ["p0", "p1", "p2", "p10", "p11"]
+    for v in range(1, 13):
+        (mdir / f"v{v}.json").write_text("{}")
+    (mdir / ".v13-0a1b2c3d.tmp").write_text("{}")  # staged, unpublished
+    assert manifest.versions(str(tmp_path / "tbl")) == list(range(1, 13))

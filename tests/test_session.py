@@ -45,6 +45,23 @@ def test_token_budget_plans_window_group_limit(spark, bare_spark, sf_dir, which)
     assert "WindowGroupLimit" in executed_plan(df)
 
 
+def test_token_budget_null_text_fails_loudly(spark, sf_dir, tmp_path):
+    """The rank prune is exact only while every document has >= 1
+    token; a null text must fail the query, not shrink the result."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    docs = pq.read_table(f"{sf_dir}/documents.parquet")
+    i = docs.schema.get_field_index("text")
+    texts = docs.column(i).to_pylist()
+    texts[0] = None
+    docs = docs.set_column(i, docs.field(i), pa.array(texts, docs.field(i).type))
+    pq.write_table(docs, str(tmp_path / "documents.parquet"))
+    df = registry.queries()["q_sample_token_budget"](spark, str(tmp_path))
+    with pytest.raises(Exception, match="null documents.text"):
+        df.collect()
+
+
 def test_bare_session_shuffles_at_its_parallelism(bare_spark, sf_dir):
     registry.queries()["q_sample_token_budget"](bare_spark, sf_dir).collect()
     assert bare_spark.conf.get("spark.sql.shuffle.partitions") == str(
@@ -112,3 +129,15 @@ def test_conf_scope_nests_on_one_thread(spark):
     assert not worker.is_alive(), "nested conf_scope deadlocked"
     assert seen == ["3", "7"]
     assert s.conf.get(key) == before
+
+
+def test_events_leaves_nanos_as_long_conf_alone(spark, sf_dir):
+    """nanosAsLong is decided by the posture, not by each events load: a
+    caller holding it at "false" still reads "false" after the load."""
+    from hcls_data_lake_spark.queries import common
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    assert posture(1)[key] == "true"
+    with conf_scope(spark, {key: "false"}):
+        common.events(spark, sf_dir)
+        assert spark.conf.get(key) == "false"

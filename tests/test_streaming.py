@@ -663,22 +663,16 @@ def test_tws_session_close_matches_fallback(spark, sf_dir):
 
 def test_manifest_sink_protocol(spark, tmp_path):
     """Pin the custom Python streaming sink's commit protocol
-    (sources/manifest_sink.py): (1) a second micro-batch run appends a
-    SECOND manifest and the reader sees the union of both batches;
-    (2) a data file without a manifest entry (a crashed batch's
-    orphan) is INVISIBLE to the manifest reader — the property that
-    makes the sink object-store-safe."""
-    import json as _json
-
+    (sources/manifest_sink.py): (1) each run commits one manifest
+    version, and the second appends, so the latest version reads the
+    union of both batches; (2) a data file without a manifest entry (a
+    crashed batch's orphan) is INVISIBLE to the manifest reader — the
+    property that makes the sink object-store-safe."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from hcls_data_lake_spark.sources.manifest_sink import (
-        committed_files,
-        register_manifest_sink,
-    )
+    from hcls_data_lake_spark.operators import manifest
 
-    register_manifest_sink(spark)
     src = str(tmp_path / "src")
     zone = str(tmp_path / "zone")
     ckpt = str(tmp_path / "ckpt")
@@ -690,55 +684,100 @@ def test_manifest_sink_protocol(spark, tmp_path):
             os.path.join(src, fname),
         )
 
-    def run_once():
-        sdf = spark.readStream.schema("event_id long").parquet(src)
-        q = (
-            sdf.writeStream.format("manifestsink")
-            .option("path", zone)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    def ids(version=None):
+        return sorted(
+            r.event_id
+            for r in manifest.read_version(spark, zone, version).collect()
         )
-        q.awaitTermination(120)
 
     write_src("a.parquet", [1, 2, 3])
-    run_once()
-    files1 = committed_files(zone)
-    assert len(files1) >= 1
-    got1 = sorted(
-        r.event_id for r in spark.read.parquet(*files1).collect()
-    )
-    assert got1 == [1, 2, 3]
+    _run_manifest_sink(spark, src, zone, ckpt)
+    assert manifest.versions(zone) == [1]
+    assert ids() == [1, 2, 3]
 
     # batch 2 appends; checkpoint resume reads only the new file
     write_src("b.parquet", [4, 5])
-    run_once()
-    files2 = committed_files(zone)
-    assert len(files2) > len(files1)
-    got2 = sorted(
-        r.event_id for r in spark.read.parquet(*files2).collect()
-    )
-    assert got2 == [1, 2, 3, 4, 5]
-    manifests = sorted(os.listdir(os.path.join(zone, "_manifests")))
-    assert manifests == ["batch-0.json", "batch-1.json"]
-    for m in manifests:
-        with open(os.path.join(zone, "_manifests", m)) as f:
-            assert all(
-                p["rows"] > 0 for p in _json.load(f)["parts"]
-            )
+    _run_manifest_sink(spark, src, zone, ckpt)
+    assert manifest.versions(zone) == [1, 2]
+    assert ids() == [1, 2, 3, 4, 5]
+    assert ids(1) == [1, 2, 3]  # time travel to the first batch
+    assert manifest.committed_meta(zone, "batch_id") == {0, 1}
+    assert sorted(os.listdir(os.path.join(zone, "_manifests"))) == [
+        "v1.json",
+        "v2.json",
+    ]
 
     # an orphan part file (crash between write and commit) is invisible
-    orphan = os.path.join(zone, "data", "part-orphan.parquet")
+    orphan = os.path.join(zone, "data", "part-orphan", "part.parquet")
+    os.makedirs(os.path.dirname(orphan))
     pq.write_table(
         pa.table({"event_id": pa.array([99], pa.int64())}), orphan
     )
-    assert orphan not in committed_files(zone)
-    got3 = sorted(
-        r.event_id
-        for r in spark.read.parquet(*committed_files(zone)).collect()
+    assert ids() == [1, 2, 3, 4, 5]
+
+
+def _run_manifest_sink(spark, src, zone, ckpt, agg=False):
+    """One availableNow run of the manifestsink stream over the parquet
+    files in `src`; `agg` streams a complete-mode count per event_id."""
+    from hcls_data_lake_spark.sources.manifest_sink import (
+        register_manifest_sink,
     )
-    assert got3 == [1, 2, 3, 4, 5]
+
+    register_manifest_sink(spark)
+    sdf = spark.readStream.schema("event_id long").parquet(src)
+    if agg:
+        sdf = sdf.groupBy("event_id").count()
+    q = (
+        sdf.writeStream.format("manifestsink")
+        .option("path", zone)
+        .option("checkpointLocation", ckpt)
+        .outputMode("complete" if agg else "append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120), "manifest-sink stream did not finish"
+
+
+def test_manifest_sink_complete_mode_overwrites(spark, tmp_path):
+    """outputMode("complete") makes Spark pass overwrite=True to the
+    sink's streamWriter, so each batch's version REPLACES the table:
+    after two runs the latest version holds only the second run's full
+    result, and vacuum reclaims exactly the first run's parts."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hcls_data_lake_spark.operators import manifest
+
+    src = str(tmp_path / "src")
+    zone = str(tmp_path / "zone")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(src, exist_ok=True)
+
+    def write_src(fname, ids):
+        pq.write_table(
+            pa.table({"event_id": pa.array(ids, pa.int64())}),
+            os.path.join(src, fname),
+        )
+
+    def counts(version=None):
+        return sorted(
+            (r.event_id, r["count"])
+            for r in manifest.read_version(spark, zone, version).collect()
+        )
+
+    write_src("a.parquet", [1, 1, 2])
+    _run_manifest_sink(spark, src, zone, ckpt, agg=True)
+    write_src("b.parquet", [2, 3])
+    _run_manifest_sink(spark, src, zone, ckpt, agg=True)
+    assert manifest.versions(zone) == [1, 2]
+    assert counts(1) == [(1, 2), (2, 1)]
+    assert counts() == [(1, 2), (2, 2), (3, 1)]
+    v1_files = set(manifest._load(zone, 1)["files"])
+    v2_files = set(manifest._load(zone, 2)["files"])
+    assert v1_files and not v1_files & v2_files
+    deleted = manifest.vacuum(zone, keep_last=1, min_age_s=0)
+    assert set(deleted) == v1_files
+    assert counts() == [(1, 2), (2, 2), (3, 1)]
 
 
 @pytest.mark.skipif(

@@ -5,7 +5,9 @@ names given on the command line (this round's additions, no driver row
 yet) go first, then every other currently-listed name ordered by the
 round of its LATEST driver CORRECTNESS row (stalest first; current
 list position breaks ties), so a 50-name driver prefix always refreshes
-the new names plus the stalest legacy evidence.
+the new names plus the stalest legacy evidence. Names with no oracle
+SQL go last whatever their round: a sampled prefix cannot diff them,
+so a slot spent on one certifies nothing.
 
     python tools/rotate_representatives.py [new_name ...]
 
@@ -23,6 +25,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+from hcls_data_lake_spark.registry import oracle_sql  # noqa: E402
 
 
 def main() -> None:
@@ -49,6 +53,8 @@ def main() -> None:
     rest = [n for n in names if n not in set(new_names)]
     rest.sort(key=lambda n: (latest.get(n, 0), pos.get(n, 0)))
     ordered = list(new_names) + rest
+    oracles = oracle_sql()
+    ordered.sort(key=lambda n: n not in oracles)  # stable
     assert len(set(ordered)) == len(ordered), "duplicate names"
     assert set(ordered) == known
 
