@@ -12,13 +12,14 @@ Two paths, mirroring SURVEY.md §1.3 / A14:
    document, emitted as a JSON string. The reference parses with the
    hl7apy grammar (parse_er7_lambda.py:8-69); hl7apy is not installed
    here, so hl7/grammar.py vendors the grammar facts that drive shape —
-   segment cardinality AND per-field repeatability — making
-   repeatable-but-singleton segments and fields lists exactly as the
-   reference serializes them (fields not in the vendored table remain
-   data-driven: a ``~`` makes a list). Strict mode mirrors the
-   reference's unknown-element failure (parse_er7_lambda.py:35-38);
-   parse failures return None which the staging chain routes to the
-   error zone (parse_er7_lambda.py:24-27 + trigger_lambda.py:32-36).
+   per-parent cardinality (the structure trees) AND per-field
+   repeatability — making repeatable-but-singleton segments and fields
+   lists exactly as the reference serializes them (fields not in the
+   vendored table remain data-driven: a ``~`` makes a list). Strict
+   mode mirrors the reference's unknown-element failure
+   (parse_er7_lambda.py:35-38); parse failures return None which the
+   staging chain routes to the error zone (parse_er7_lambda.py:24-27 +
+   trigger_lambda.py:32-36).
    Leaf values decode HL7 escape sequences (unescape_er7).
 """
 
@@ -188,11 +189,7 @@ def er7_unescape(value: Column) -> Column:
 
 
 def _parse_field(
-    raw: str,
-    seg_id: str = "",
-    field_num: int = 0,
-    dt: str | None = None,
-    g: Grammar | None = None,
+    raw: str, seg_id: str, field_num: int, dt: str | None, g: Grammar
 ) -> object:
     """Field -> str | dict of components | list of repetitions.
 
@@ -207,9 +204,7 @@ def _parse_field(
     grammar-shape fix. ``dt`` overrides the vendored field datatype
     (the OBX-5 'varies' case, typed by OBX-2 at parse time). ``g`` is
     the message's VERSION-RESOLVED grammar view (r8: hl7apy loads the
-    MSH-12 version's tables — grammar.grammar_for); None = 2.5 base."""
-    if g is None:
-        g = grammar_for(None)
+    MSH-12 version's tables — grammar.grammar_for)."""
     if dt is None:
         dt = g.field_datatype(seg_id, field_num)
     if REP_SEP in raw:
@@ -219,8 +214,7 @@ def _parse_field(
     return _parse_rep(raw, dt, g)
 
 
-def _parse_rep(raw: str, dt: str | None = None,
-               g: Grammar | None = None) -> object:
+def _parse_rep(raw: str, dt: str | None, g: Grammar) -> object:
     """One field repetition -> str | dict of components.
 
     DATATYPE-driven like hl7apy (the reference's leaf branch,
@@ -239,8 +233,6 @@ def _parse_rep(raw: str, dt: str | None = None,
     wire, so the reference's recursion serializes it as a dict
     (VERDICT r6 ask #4 — the COVERAGE caveat-3 residual). Fields with
     UNKNOWN datatype stay data-driven: no ``^`` -> plain string."""
-    if g is None:
-        g = grammar_for(None)
     if dt in PRIMITIVE_TYPES:
         return _leaf(raw)
     if COMP_SEP in raw:
@@ -292,19 +284,16 @@ class _StrictViolation(Exception):
 
 
 def _attach_union(
-    doc: dict, seg_id: str, body: dict, strict: bool,
-    structure: str | None = None, g: Grammar | None = None
+    doc: dict, seg_id: str, body: dict, strict: bool, g: Grammar
 ) -> None:
-    """Flat attachment under the cardinality tables — used for unknown
-    structures and for segments the resolved structure does not declare
-    (lab02's ADD continuation rows, file framing)."""
-    if g is None:
-        g = grammar_for(None)
-    if g.is_repeatable(seg_id, structure):
+    """Flat attachment under the union cardinality table — used for
+    structures without a tree and for segments the resolved structure
+    does not declare (lab02's ADD continuation rows, file framing)."""
+    if g.is_repeatable(seg_id):
         doc.setdefault(seg_id, []).append(body)
     elif seg_id not in doc:
         doc[seg_id] = body
-    elif strict and not g.is_repeatable(seg_id):
+    elif strict:
         # duplicated max-1 segment: structural violation (union-level
         # check on purpose — see parse_er7's docstring)
         raise _StrictViolation
@@ -373,12 +362,12 @@ def _match_into(
 def parse_er7(msg: str, strict: bool = False) -> str | None:
     """Parse one ER7 message to a nested JSON document string.
 
-    Document shape is GRAMMAR-driven (hl7.grammar vendored structure
-    trees + cardinality tables, standing in for hl7apy —
-    parse_er7_lambda.py:52-69): when the message's abstract structure
-    is vendored (resolved from MSH-9.3 or the event->structure map),
-    segments nest under their GROUP wrappers exactly as hl7apy's
-    recursion serializes them — lab01's observations live at
+    Document shape is GRAMMAR-driven (hl7.grammar's vendored structure
+    trees, standing in for hl7apy — parse_er7_lambda.py:52-69): when
+    the message's abstract structure has a tree (resolved from MSH-9.3
+    or the event->structure map), segments nest under their GROUP
+    wrappers exactly as hl7apy's recursion serializes them — lab01's
+    observations live at
     ``ORU_R01_PATIENT_RESULT[0].ORU_R01_ORDER_OBSERVATION[0]
     .ORU_R01_OBSERVATION[*].OBX`` — with each element a dict when
     max-1 within its parent (the reference's
@@ -497,18 +486,18 @@ def parse_er7(msg: str, strict: bool = False) -> str | None:
                 newpos = _match_into(tree, segments, pos, doc, strict)
                 if newpos == pos:
                     seg_id, body = segments[pos]
-                    _attach_union(doc, seg_id, body, strict, None, g)
+                    _attach_union(doc, seg_id, body, strict, g)
                     pos += 1
                 else:
                     pos = newpos
         else:
-            # Unknown/unvendored structure: flat attachment under the
-            # cardinality tables (union-level strict duplicate check on
-            # purpose: a segment that is max-1 within its repeating
-            # GROUP legally occurs many times per message, and an
-            # unresolved structure must not reject that repeat).
+            # Structure without a tree: flat attachment under the union
+            # table (union-level strict duplicate check on purpose: a
+            # segment that is max-1 within its repeating GROUP legally
+            # occurs many times per message, and an unresolved
+            # structure must not reject that repeat).
             for seg_id, body in segments:
-                _attach_union(doc, seg_id, body, strict, structure, g)
+                _attach_union(doc, seg_id, body, strict, g)
         if "MSH" not in doc:
             return None
         return json.dumps(doc, sort_keys=True, ensure_ascii=False)

@@ -1,21 +1,25 @@
-"""Vendored HL7 v2.x segment-cardinality grammar (ADT/ORU/ORM/ORR/ACK/
-VXU/SIU/MDM/DFT/BAR/RDE/RAS families).
+"""Vendored HL7 v2.x grammar (ADT/ORU/ORM/ORR/ACK/VXU/SIU/MDM/DFT/BAR/
+RDE/RAS families).
 
 The reference's parser is grammar-driven through hl7apy
 (parse_er7_lambda.py:57-65): an element whose grammar allows repetition
 serializes as a LIST even when it occurs once, a max-1 element attaches
 as a plain dict, and an element unknown to the declared HL7 version
 RAISES (trigger_lambda.py routes that to the error zone). hl7apy is not
-installable here, so this table vendors the one grammar fact that
-drives document shape — per-segment max cardinality — for the message
-families the reference corpus exercises (ADT^A01/A02/A08/A34,
-ORU^R01, plus the ORU batch framing segments lab02.txt carries).
+installable here, so this module vendors the grammar facts that drive
+document shape.
 
-Cardinality follows the HL7 v2.5.1 abstract message definitions: a
-segment is marked repeatable if ANY of the covered message structures
-allows it to repeat (the lake stages mixed families into one zone, so
-the shape must be stable across them — a per-message-type table would
-make the same segment change shape between files).
+``STRUCTURE_TREES`` is the one per-structure shape source: each
+abstract message structure's group hierarchy with every element's max
+cardinality within its parent, which is exactly where the reference
+decides dict-vs-list (``child_element.parent.repetitions[name]``).
+``SEGMENT_CARDINALITY`` serves two other purposes: the union-over-
+families fallback for segments a message carries outside its resolved
+structure (or for messages whose structure has no tree) — a segment is
+repeatable there if ANY covered structure lets it repeat, so its shape
+stays stable across the mixed families one zone stages — and the
+known-segment set strict mode checks. ``grammar_for(version)`` returns
+the ``Grammar`` view every lookup goes through.
 """
 
 from __future__ import annotations
@@ -90,8 +94,8 @@ SEGMENT_CARDINALITY: dict[str, int | None] = {
     # orders, RAS_O17 administrations) makes RXA and RXR repeatable in
     # the union view — RXA repeats within RAS_O17's ADMINISTRATION
     # group and RXR repeats in both RDE/RAS order details; VXU_V04's
-    # max-1 shapes are preserved by its per-structure table, which
-    # always wins over this union fallback
+    # max-1 shapes come from its structure tree, which decides every
+    # segment it declares before this union fallback is consulted
     "RXA": None,
     "RXR": None,
     "RXE": 1,   # encoded order: one per RDE/RAS ORDER group
@@ -166,25 +170,18 @@ FIELD_REPEATABLE: dict[str, frozenset[int]] = {
 
 
 # ---------------------------------------------------------------------
-# Per-(message structure, segment) cardinality (VERDICT r4 ask #4).
+# Message structure resolution (VERDICT r4 ask #4).
 #
-# The reference keys repetitions per PARENT structure
+# The reference keys repetitions per PARENT
 # (parse_er7_lambda.py:57-65: `child_element.parent.repetitions[name]`),
 # so the same segment can be a dict in one message structure and a list
-# in another — e.g. OBR repeats directly under ADT observation use but
-# is max-1 within ORU_R01's ORDER_OBSERVATION group. The tables below
-# vendor the HL7 v2.5 abstract message definitions for the structures
-# the corpus exercises, flattened to segment level: a segment's entry is
-# its max cardinality WITHIN ITS IMMEDIATE PARENT (group or message),
-# because that is the level at which the reference decides dict-vs-list
-# for each occurrence. Segments whose GROUP repeats (e.g. ORU_R01's
-# OBR, one per repeating ORDER_OBSERVATION) are therefore max-1 here —
-# each occurrence serializes as a dict in the reference's output — and
-# the parser's lenient data-driven demotion still yields a list when a
-# message actually carries several. Structures not listed (and segments
-# a message carries outside its declared structure, e.g. lab02's ADD
-# continuation rows, which hl7apy itself would reject) fall back to the
-# union table above.
+# in another — e.g. OBX repeats directly under ADT_A01 but is max-1
+# within ORU_R01's OBSERVATION group. A message's abstract structure is
+# resolved below, and its tree in STRUCTURE_TREES then decides every
+# element's shape within its parent. Segments a message carries outside
+# its structure (e.g. lab02's ADD continuation rows, which hl7apy itself
+# would reject) and messages whose structure has no tree fall back to
+# the union table above.
 
 # trigger event (MSH-9.1_9.2) -> abstract structure, HL7 v2.5 mapping
 # for the covered families. MSH-9.3, when present, wins over this map.
@@ -293,188 +290,6 @@ EVENT_STRUCTURE: dict[str, str] = {
     "ACK_R01": "ACK",
     "ACK_O01": "ACK",
     "ACK_V04": "ACK",
-}
-
-_ADT_A01_SEGS: dict[str, int | None] = {
-    "MSH": 1, "SFT": None, "EVN": 1, "PID": 1, "PD1": 1, "ROL": None,
-    "NK1": None, "PV1": 1, "PV2": 1, "DB1": None, "OBX": None,
-    "AL1": None, "DG1": None, "DRG": 1,
-    # PROCEDURE{PR1, [ROL]} / INSURANCE{IN1, [IN2], [IN3], [ROL]}:
-    # max-1 within their repeating group -> dict per occurrence
-    "PR1": 1, "GT1": None, "IN1": 1, "IN2": 1, "IN3": 1,
-    "ACC": 1, "UB1": 1, "UB2": 1, "PDA": 1,
-}
-
-STRUCTURE_SEGMENT_CARDINALITY: dict[str, dict[str, int | None]] = {
-    "ADT_A01": _ADT_A01_SEGS,
-    "ADT_A02": {
-        "MSH": 1, "SFT": None, "EVN": 1, "PID": 1, "PD1": 1,
-        "ROL": None, "PV1": 1, "PV2": 1, "DB1": None, "OBX": None,
-        "PDA": 1,
-    },
-    # A05/A14/A28/A31 share ADT_A05: same flat shape as ADT_A01 minus
-    # the PDA death segment
-    "ADT_A05": {k: v for k, v in _ADT_A01_SEGS.items() if k != "PDA"},
-    # merge, patient-ID-only (A30/A34/...): every segment is max-1
-    "ADT_A30": {"MSH": 1, "SFT": None, "EVN": 1, "PID": 1, "PD1": 1,
-                "MRG": 1},
-    # merge family with repeating PATIENT group{PID, [PD1], MRG, [PV1]}:
-    # all max-1 within the group
-    "ADT_A39": {"MSH": 1, "SFT": None, "EVN": 1, "PID": 1, "PD1": 1,
-                "MRG": 1, "PV1": 1},
-    # r6 grammar-breadth structures (flat fallback views of the trees;
-    # max card WITHIN THE IMMEDIATE PARENT, like the rows above)
-    "ADT_A03": {
-        "MSH": 1, "SFT": None, "EVN": 1, "PID": 1, "PD1": 1,
-        "ROL": None, "PV1": 1, "PV2": 1, "DB1": None, "DG1": None,
-        "DRG": 1, "PR1": 1, "OBX": None, "PDA": 1,
-    },
-    "SIU_S12": {
-        "MSH": 1, "SCH": 1, "TQ1": None, "NTE": None, "PID": 1,
-        "PD1": 1, "PV1": 1, "PV2": 1, "OBX": None, "DG1": None,
-        "RGS": 1, "AIS": 1, "AIG": 1, "AIL": 1, "AIP": 1,
-    },
-    "MDM_T02": {
-        "MSH": 1, "SFT": None, "EVN": 1, "PID": 1, "PV1": 1,
-        "ORC": 1, "TQ1": 1, "TQ2": None, "OBR": 1, "NTE": None,
-        "TXA": 1, "OBX": 1,
-    },
-    # r7 grammar-breadth structures (VERDICT r6 ask #3; flat views of
-    # the trees below, max card WITHIN THE IMMEDIATE PARENT)
-    "ACK": {"MSH": 1, "SFT": None, "MSA": 1, "ERR": None},
-    "ORM_O01": {
-        "MSH": 1, "NTE": None, "PID": 1, "PD1": 1, "PV1": 1, "PV2": 1,
-        "IN1": 1, "IN2": 1, "IN3": 1, "GT1": 1, "AL1": None,
-        "ORC": 1, "OBR": 1, "RQD": 1, "RQ1": 1, "RXO": 1,
-        "ODS": None, "ODT": None, "CTD": 1, "DG1": None, "OBX": 1,
-        "FT1": None, "CTI": None, "BLG": 1,
-    },
-    "VXU_V04": {
-        "MSH": 1, "SFT": None, "PID": 1, "PD1": 1, "NK1": None,
-        "PV1": 1, "PV2": 1, "GT1": None, "IN1": 1, "IN2": 1, "IN3": 1,
-        "ORC": 1, "TQ1": 1, "TQ2": None, "RXA": 1, "RXR": 1,
-        "OBX": 1, "NTE": None,
-    },
-    "BAR_P01": {
-        "MSH": 1, "SFT": None, "EVN": 1, "PID": 1, "PD1": 1,
-        "ROL": None, "PV1": 1, "PV2": 1, "DB1": None, "OBX": None,
-        "AL1": None, "DG1": None, "DRG": 1, "PR1": 1, "GT1": None,
-        "NK1": None, "IN1": 1, "IN2": 1, "IN3": 1, "ACC": 1,
-        "UB1": 1, "UB2": 1,
-    },
-    # r8 ask #4 structures (flat views, max card WITHIN IMMEDIATE PARENT)
-    "BAR_P02": {"MSH": 1, "SFT": None, "EVN": 1, "PID": 1, "PD1": 1,
-                "PV1": 1, "DB1": None},
-    "BAR_P05": {
-        "MSH": 1, "SFT": None, "EVN": 1, "PID": 1, "PD1": 1,
-        "ROL": None, "PV1": 1, "PV2": 1, "DB1": None, "OBX": None,
-        "AL1": None, "DG1": None, "DRG": 1, "PR1": 1, "GT1": None,
-        "NK1": None, "IN1": 1, "IN2": 1, "IN3": 1, "ACC": 1,
-        "UB1": 1, "UB2": 1, "ABS": 1, "BLC": None, "RMI": 1,
-    },
-    "BAR_P06": {"MSH": 1, "SFT": None, "EVN": 1, "PID": 1, "PV1": 1},
-    "ORR_O02": {
-        "MSH": 1, "SFT": None, "MSA": 1, "ERR": 1, "NTE": None,
-        "PID": 1, "ORC": 1, "OBR": 1, "RQD": 1, "RQ1": 1, "RXO": 1,
-        "ODS": None, "ODT": None, "CTI": None,
-    },
-    # r9 pharmacy structures (flat views of the trees below, max card
-    # WITHIN THE IMMEDIATE PARENT; conflicted segments resolve to their
-    # FIRST tree occurrence like _flatten_tree — RXR repeats in
-    # ORDER_DETAIL, RXC is max-1 within its COMPONENT group)
-    "RDE_O11": {
-        "MSH": 1, "SFT": None, "NTE": None, "PID": 1, "PD1": 1,
-        "PV1": 1, "PV2": 1, "IN1": 1, "IN2": 1, "IN3": 1, "GT1": 1,
-        "AL1": None, "ORC": 1, "TQ1": 1, "TQ2": None, "RXO": 1,
-        "RXR": None, "RXC": 1, "RXE": 1, "OBX": 1, "FT1": None,
-        "BLG": 1, "CTI": None,
-    },
-    "RAS_O17": {
-        "MSH": 1, "SFT": None, "NTE": None, "PID": 1, "PD1": 1,
-        "AL1": None, "PV1": 1, "PV2": 1, "ORC": 1, "TQ1": 1,
-        "TQ2": None, "RXO": 1, "RXR": None, "RXC": 1, "RXE": 1,
-        "RXA": None, "OBX": 1, "CTI": None,
-    },
-    "RDS_O13": {
-        "MSH": 1, "SFT": None, "NTE": None, "PID": 1, "PD1": 1,
-        "AL1": None, "PV1": 1, "PV2": 1, "ORC": 1, "TQ1": 1,
-        "TQ2": None, "RXO": 1, "RXR": None, "RXC": 1, "RXE": 1,
-        "RXD": 1, "OBX": 1, "FT1": None, "CTI": None,
-    },
-    "OMD_O03": {
-        "MSH": 1, "SFT": None, "NTE": None, "PID": 1, "PD1": 1,
-        "PV1": 1, "PV2": 1, "IN1": 1, "IN2": 1, "IN3": 1, "GT1": 1,
-        "AL1": None, "ORC": 1, "TQ1": 1, "TQ2": None, "ODS": None,
-        "OBX": 1, "ODT": None,
-    },
-    "RRE_O12": {
-        "MSH": 1, "SFT": None, "MSA": 1, "ERR": None, "NTE": None,
-        "PID": 1, "ORC": 1, "TQ1": 1, "TQ2": None, "RXE": 1,
-        "RXR": None, "RXC": None,
-    },
-    # r10 structures (flat views of the trees below, max card WITHIN
-    # THE IMMEDIATE PARENT, first tree occurrence wins on conflicts)
-    "OMS_O05": {
-        "MSH": 1, "SFT": None, "NTE": None, "PID": 1, "PD1": 1,
-        "PV1": 1, "PV2": 1, "IN1": 1, "IN2": 1, "IN3": 1, "GT1": 1,
-        "AL1": None, "ORC": 1, "TQ1": 1, "TQ2": None, "RQD": 1,
-        "RQ1": 1, "OBX": 1, "BLG": 1,
-    },
-    "OMG_O19": {
-        "MSH": 1, "SFT": None, "NTE": None, "PID": 1, "PD1": 1,
-        "PV1": 1, "PV2": 1, "IN1": 1, "IN2": 1, "IN3": 1, "GT1": 1,
-        "AL1": None, "ORC": 1, "TQ1": 1, "TQ2": None, "OBR": 1,
-        "CTD": 1, "DG1": None, "OBX": 1, "SPM": 1, "FT1": None,
-        "CTI": None, "BLG": 1,
-    },
-    "RRA_O18": {
-        "MSH": 1, "SFT": None, "MSA": 1, "ERR": None, "NTE": None,
-        "PID": 1, "ORC": 1, "TQ1": 1, "TQ2": None, "RXA": None,
-        "RXR": 1,
-    },
-    "RRD_O14": {
-        "MSH": 1, "SFT": None, "MSA": 1, "ERR": None, "NTE": None,
-        "PID": 1, "ORC": 1, "TQ1": 1, "TQ2": None, "RXD": 1,
-        "RXR": None, "RXC": None,
-    },
-    # r11 query protocol (flat = tree: the generic Q11/K11 structures
-    # have no groups in v2.5 ch.5)
-    "QBP_Q11": {"MSH": 1, "SFT": None, "QPD": 1, "RCP": 1, "DSC": 1},
-    "RSP_K11": {
-        "MSH": 1, "SFT": None, "MSA": 1, "ERR": 1, "QAK": 1,
-        "QPD": 1, "DSC": 1,
-    },
-    # r11 breadth: master files + scheduling request/response (flat
-    # views of the trees below; segment max WITHIN IMMEDIATE PARENT)
-    "MFN_M01": {"MSH": 1, "SFT": None, "MFI": 1, "MFE": 1},
-    "SRM_S01": {
-        "MSH": 1, "ARQ": 1, "APR": 1, "NTE": None, "PID": 1,
-        "PV1": 1, "PV2": 1, "OBX": None, "DG1": None, "RGS": 1,
-        "AIS": 1, "AIG": 1, "AIL": 1, "AIP": 1,
-    },
-    "SRR_S01": {
-        "MSH": 1, "MSA": 1, "ERR": None, "NTE": None, "SCH": 1,
-        "PID": 1, "PV1": 1, "PV2": 1, "DG1": None, "RGS": 1,
-        "AIS": 1, "AIG": 1, "AIL": 1, "AIP": 1,
-    },
-    "DFT_P03": {
-        "MSH": 1, "SFT": None, "EVN": 1, "PID": 1, "PD1": 1,
-        "ROL": None, "PV1": 1, "PV2": 1, "DB1": None,
-        "ORC": 1, "OBR": 1, "NTE": None, "OBX": 1,
-        "FT1": 1, "PR1": 1, "DG1": None, "DRG": 1, "GT1": None,
-        "IN1": 1, "IN2": 1, "IN3": 1, "ACC": 1,
-    },
-    "ORU_R01": {
-        "MSH": 1, "SFT": None, "PID": 1, "PD1": 1, "NTE": None,
-        "NK1": None, "PV1": 1, "PV2": 1,
-        # ORDER_OBSERVATION{[ORC], OBR, [NTE], [TQ1], [CTD],
-        #   OBSERVATION{OBX, [NTE]}, [FT1], [CTI], SPECIMEN{SPM,[OBX]}}
-        # OBX is max-1 within OBSERVATION (its dominant parent; the
-        # SPECIMEN variant allows repeats — resolved to the dominant
-        # shape, and data-driven demotion covers real repeats anyway)
-        "ORC": 1, "OBR": 1, "TQ1": None, "CTD": 1, "OBX": 1,
-        "FT1": None, "CTI": None, "SPM": 1, "DSC": 1,
-    },
 }
 
 
@@ -1448,14 +1263,6 @@ STRUCTURE_TREES: dict[str, tuple] = {
 }
 
 
-def structure_tree(structure: str | None) -> tuple | None:
-    """The vendored abstract-structure tree for a resolved message
-    structure, or None (-> flat union-table attachment)."""
-    if structure is None:
-        return None
-    return STRUCTURE_TREES.get(structure)
-
-
 _FIRST_SET_CACHE: dict[tuple, frozenset[str]] = {}
 
 
@@ -1478,20 +1285,6 @@ def first_set(node: tuple) -> frozenset[str]:
         out = frozenset(acc)
     _FIRST_SET_CACHE[node] = out
     return out
-
-
-def structure_for(message_type: str, trigger: str, explicit: str | None) -> str | None:
-    """Resolve the abstract message structure: MSH-9.3 when the sender
-    declared one (adt01 carries ADT^A01^ADT_A01), else the v2.5
-    event->structure map; None when the family is not vendored (shape
-    then falls back to the union table)."""
-    if explicit:
-        return explicit if explicit in STRUCTURE_SEGMENT_CARDINALITY else None
-    if message_type == "ACK":
-        # general acknowledgment: one structure for every trigger
-        # (v2.5 ch.2 — the ACK is defined once, echoed per event)
-        return "ACK"
-    return EVENT_STRUCTURE.get(f"{message_type}_{trigger}")
 
 
 # ---------------------------------------------------------------------
@@ -1692,15 +1485,6 @@ COMPONENT_DATATYPE: dict[str, dict[int, str]] = {
 }
 
 
-def component_datatype(dt: str | None, comp_num: int) -> str | None:
-    """Datatype of component ``comp_num`` within composite ``dt``, or
-    None when either is unknown (-> synthetic S<n> subcomponent keys,
-    the never-lose-data fallback)."""
-    if dt is None:
-        return None
-    return COMPONENT_DATATYPE.get(dt, _EMPTY_DT).get(comp_num)
-
-
 # OBX-2 value-type tokens that legally type OBX-5 (v2.5 table 0125
 # subset the corpus uses + common clinical types). Anything else keeps
 # the C<n> fallback rather than minting keys from arbitrary data.
@@ -1708,45 +1492,6 @@ VARIES_TYPES: frozenset[str] = frozenset(
     {"CE", "CWE", "CF", "CX", "DT", "ED", "FT", "ID", "IS", "NM",
      "RP", "SN", "ST", "TM", "TS", "TX", "XAD", "XCN", "XON", "XPN"}
 )
-
-
-def field_datatype(seg_id: str, field_num: int) -> str | None:
-    """Datatype short name for SEG-field_num, or None (-> C<n> keys)."""
-    return FIELD_DATATYPE.get(seg_id, _EMPTY_DT).get(field_num)
-
-
-_EMPTY_DT: dict[int, str] = {}
-
-
-def is_known(seg_id: str) -> bool:
-    return seg_id in SEGMENT_CARDINALITY
-
-
-def field_repeats(seg_id: str, field_num: int) -> bool:
-    """True if the grammar declares SEG-field_num repeatable (so a
-    singleton occurrence still serializes as a list). Unknown pairs
-    return False — shape falls back to data-driven."""
-    return field_num in FIELD_REPEATABLE.get(seg_id, _EMPTY)
-
-
-_EMPTY: frozenset[int] = frozenset()
-
-
-def is_repeatable(seg_id: str, structure: str | None = None) -> bool:
-    """Unknown segments default to repeatable: their cardinality is
-    undeclared, and a list never loses an occurrence (lenient mode
-    only — strict mode rejects unknown segments before this matters).
-
-    When ``structure`` names a vendored message structure, its
-    per-structure table wins (the reference keys repetitions per parent
-    structure — parse_er7_lambda.py:57-65); a segment the structure
-    does not declare, or an unknown structure, falls back to the
-    union-over-families table so no occurrence is ever lost."""
-    if structure is not None:
-        per = STRUCTURE_SEGMENT_CARDINALITY.get(structure)
-        if per is not None and seg_id in per:
-            return per[seg_id] is None
-    return SEGMENT_CARDINALITY.get(seg_id, None) is None
 
 
 # =====================================================================
@@ -1986,57 +1731,57 @@ def _prune_tree(tree: tuple, removed: set[str]) -> tuple:
     return tuple(out)
 
 
-def _flatten_tree(tree: tuple, out: dict | None = None) -> dict:
-    """Flat seg->max-card view of a tree (cardinality WITHIN the
-    immediate parent, like STRUCTURE_SEGMENT_CARDINALITY); first
-    occurrence wins, matching the greedy walk's attachment order."""
-    if out is None:
-        out = {}
-    for name, card, kids in tree:
-        if kids is None:
-            out.setdefault(name, card)
-        else:
-            _flatten_tree(kids, out)
-    return out
+_EMPTY: frozenset[int] = frozenset()
+_EMPTY_DT: dict[int, str] = {}
 
 
 class Grammar:
-    """One version's resolved grammar view. The module-level functions
-    below remain the v2.5 base view for existing callers; the parser
-    threads an instance of this through every shape decision."""
+    """One version's resolved grammar view, the only lookup API: the
+    parser threads the instance ``grammar_for`` returns through every
+    shape decision (``grammar_for(None)`` is the 2.5 base)."""
 
-    __slots__ = ("version", "seg_card", "field_rep", "field_dt",
-                 "comp_dt", "event_structure", "struct_card", "trees")
+    __slots__ = ("seg_card", "field_rep", "field_dt", "comp_dt",
+                 "event_structure", "trees")
 
-    def __init__(self, version, seg_card, field_rep, field_dt, comp_dt,
-                 event_structure, struct_card, trees):
-        self.version = version
+    def __init__(self, seg_card, field_rep, field_dt, comp_dt,
+                 event_structure, trees):
         self.seg_card = seg_card
         self.field_rep = field_rep
         self.field_dt = field_dt
         self.comp_dt = comp_dt
         self.event_structure = event_structure
-        self.struct_card = struct_card
         self.trees = trees
 
     def is_known(self, seg_id: str) -> bool:
         return seg_id in self.seg_card
 
     def field_repeats(self, seg_id: str, field_num: int) -> bool:
+        """True if the grammar declares SEG-field_num repeatable (so a
+        singleton occurrence still serializes as a list). Unknown pairs
+        return False — shape falls back to data-driven."""
         return field_num in self.field_rep.get(seg_id, _EMPTY)
 
     def field_datatype(self, seg_id: str, field_num: int) -> str | None:
+        """Datatype short name for SEG-field_num, or None (-> C<n> keys)."""
         return self.field_dt.get(seg_id, _EMPTY_DT).get(field_num)
 
     def component_datatype(self, dt: str | None, comp_num: int) -> str | None:
+        """Datatype of component ``comp_num`` within composite ``dt``, or
+        None when either is unknown (-> synthetic S<n> subcomponent keys,
+        the never-lose-data fallback)."""
         if dt is None:
             return None
         return self.comp_dt.get(dt, _EMPTY_DT).get(comp_num)
 
     def structure_for(self, message_type: str, trigger: str,
                       explicit: str | None) -> str | None:
+        """Resolve the abstract message structure: MSH-9.3 when the
+        sender declared one with a vendored tree (adt01 carries
+        ADT^A01^ADT_A01), else the event->structure map; ACK is one
+        structure for every trigger (v2.5 ch.2). None when the family
+        has no tree (shape then falls back to the union table)."""
         if explicit:
-            return explicit if explicit in self.struct_card else None
+            return explicit if explicit in self.trees else None
         if message_type == "ACK" and "ACK" in self.trees:
             return "ACK"
         return self.event_structure.get(f"{message_type}_{trigger}")
@@ -2046,11 +1791,12 @@ class Grammar:
             return None
         return self.trees.get(structure)
 
-    def is_repeatable(self, seg_id: str, structure: str | None = None) -> bool:
-        if structure is not None:
-            per = self.struct_card.get(structure)
-            if per is not None and seg_id in per:
-                return per[seg_id] is None
+    def is_repeatable(self, seg_id: str) -> bool:
+        """Union-table cardinality, for segments no resolved tree
+        declares. Unknown segments default to repeatable: their
+        cardinality is undeclared, and a list never loses an occurrence
+        (lenient mode only — strict mode rejects unknown segments
+        before this matters)."""
         return self.seg_card.get(seg_id, None) is None
 
 
@@ -2083,22 +1829,13 @@ def _build_grammar(version: str | None) -> Grammar:
         trees = {k: _prune_tree(v, removed) for k, v in trees.items()}
         event_structure = dict(EVENT_STRUCTURE)
         event_structure.update(delta.get("event_structure", {}))
-    struct_card = dict(STRUCTURE_SEGMENT_CARDINALITY)
-    for name, tree in trees.items():
-        if name not in STRUCTURE_SEGMENT_CARDINALITY or name in delta.get(
-            "structure_trees", {}
-        ):
-            struct_card[name] = _flatten_tree(tree)
-    if delta.get("structure_trees_clear"):
-        struct_card = {}
-    return Grammar(version, seg_card, field_rep, field_dt, comp_dt,
-                   event_structure, struct_card, trees)
+    return Grammar(seg_card, field_rep, field_dt, comp_dt,
+                   event_structure, trees)
 
 
 _BASE_GRAMMAR = Grammar(
-    "2.5", SEGMENT_CARDINALITY, FIELD_REPEATABLE, FIELD_DATATYPE,
-    COMPONENT_DATATYPE, EVENT_STRUCTURE, STRUCTURE_SEGMENT_CARDINALITY,
-    STRUCTURE_TREES,
+    SEGMENT_CARDINALITY, FIELD_REPEATABLE, FIELD_DATATYPE,
+    COMPONENT_DATATYPE, EVENT_STRUCTURE, STRUCTURE_TREES,
 )
 
 _GRAMMAR_CACHE: dict[str, Grammar] = {}

@@ -42,16 +42,14 @@ import shutil
 
 _MANIFESTS = "_manifests"
 _DATA = "data"
+_EXPIRED = "expired"
 
 
 def _manifest_dir(root: str) -> str:
     return os.path.join(root, _MANIFESTS)
 
 
-def versions(root: str) -> list[int]:
-    """All committed versions, ascending. Empty if the table has never
-    been committed."""
-    mdir = _manifest_dir(root)
+def _listed_versions(mdir: str) -> list[int]:
     if not os.path.isdir(mdir):
         return []
     out = []
@@ -61,9 +59,31 @@ def versions(root: str) -> list[int]:
     return sorted(out)
 
 
-def _load(root: str, version: int) -> dict:
-    with open(os.path.join(_manifest_dir(root), f"v{version}.json")) as fh:
+def versions(root: str) -> list[int]:
+    """All committed versions, ascending. Empty if the table has never
+    been committed."""
+    return _listed_versions(_manifest_dir(root))
+
+
+def _load(root: str, version: int, subdir: str = "") -> dict:
+    path = os.path.join(_manifest_dir(root), subdir, f"v{version}.json")
+    with open(path) as fh:
         return json.load(fh)
+
+
+def _newest(root: str) -> tuple[int, dict, bool]:
+    """The newest publish as ``(version, manifest, live)``: the newest
+    live manifest, else the newest vacuum-expired one (``live`` False:
+    its data files may be gone), else ``(0, {}, False)`` for a table
+    never committed. Versions are never reused, so the newest one
+    carries every committed txn value forward."""
+    live = versions(root)
+    if live:
+        return live[-1], _load(root, live[-1]), True
+    expired = _listed_versions(os.path.join(_manifest_dir(root), _EXPIRED))
+    if expired:
+        return expired[-1], _load(root, expired[-1], _EXPIRED), False
+    return 0, {}, False
 
 
 def _file_stats(path: str) -> dict:
@@ -124,22 +144,28 @@ def publish(
     racing the same batch cannot both land it: whichever loses the
     version race retries, re-checks, finds the key committed, and
     returns 0 (the no-op sentinel; real versions start at 1). The
-    caller owns `files` and deletes them on 0."""
+    caller owns `files` and deletes them on 0.
+
+    Every manifest carries the committed txn values forward under
+    ``"txns"`` (``{key: [values]}``: the previous manifest's plus this
+    publish's ``meta[txn_key]``, in append and overwrite mode alike),
+    so the fence reads one manifest, not the table's whole history."""
     import uuid
 
     _check_args(mode, meta, txn_key)
     os.makedirs(_manifest_dir(root), exist_ok=True)
     new_stats = {f: _file_stats(os.path.join(root, f)) for f in files}
     while True:
-        prev = versions(root)
-        version = (prev[-1] + 1) if prev else 1
-        if txn_key is not None and meta[txn_key] in committed_meta(
-            root, txn_key
-        ):
-            return 0  # already durably committed (replay / lost fence race)
+        latest, prev_m, live = _newest(root)
+        version = latest + 1
+        txns = prev_m.get("txns", {})
+        if txn_key is not None:
+            committed = txns.setdefault(txn_key, [])
+            if meta[txn_key] in committed:
+                return 0  # already durably committed (replay / lost fence race)
+            committed.append(meta[txn_key])
         all_files, stats = files, new_stats
-        if mode == "append" and prev:
-            prev_m = _load(root, prev[-1])
+        if mode == "append" and live:
             all_files = prev_m["files"] + files
             stats = {**prev_m.get("stats", {}), **new_stats}
         manifest = {
@@ -148,6 +174,7 @@ def publish(
             "files": all_files,
             "stats": stats,
             "meta": meta or {},
+            "txns": txns,
             "schema": schema.jsonValue(),
         }
         # per-attempt temp name: racing publishers never share one
@@ -273,30 +300,16 @@ def _may_match(file_stats: dict, prune: dict) -> bool:
     return True
 
 
-_EXPIRED = "expired"
-
-
 def committed_meta(root: str, key: str) -> set:
-    """All values of `meta[key]` across committed versions — e.g. the
-    set of streaming batch ids already durably committed (the
-    exactly-once replay check). Vacuum-EXPIRED manifests are scanned
-    too: their data is gone, but the fact that their batches committed
-    must survive retention, or a checkpoint restored past a vacuum
-    would replay old batches as new (duplicates)."""
-    out = set()
-    for v in versions(root):
-        m = _load(root, v).get("meta", {})
-        if key in m:
-            out.add(m[key])
-    edir = os.path.join(_manifest_dir(root), _EXPIRED)
-    if os.path.isdir(edir):
-        for f in os.listdir(edir):
-            if f.startswith("v") and f.endswith(".json"):
-                with open(os.path.join(edir, f)) as fh:
-                    m = json.load(fh).get("meta", {})
-                if key in m:
-                    out.add(m[key])
-    return out
+    """Every ``meta[key]`` value published with ``txn_key=key`` — e.g.
+    the set of streaming batch ids already durably committed (the
+    exactly-once replay check). It is read from the newest manifest
+    alone, which carries the set forward (see `publish`); when vacuum
+    kept no live manifest that is the newest EXPIRED one, because the
+    fact that a batch committed must survive retention, or a
+    checkpoint restored past a vacuum would replay old batches as new
+    (duplicates)."""
+    return set(_newest(root)[1].get("txns", {}).get(key, ()))
 
 
 def vacuum(root: str, keep_last: int = 1, min_age_s: float = 600.0) -> list[str]:
@@ -308,8 +321,9 @@ def vacuum(root: str, keep_last: int = 1, min_age_s: float = 600.0) -> list[str]
     Two safety properties:
     - Expired manifests are MOVED to ``_manifests/expired/``, never
       destroyed: their versions stop being readable (the bytes are
-      gone) but their commit metadata — the batch ids the
-      exactly-once replay check scans — survives retention.
+      gone) but their commit metadata survives retention: with
+      ``keep_last=0`` the newest expired manifest is the one whose
+      carried batch ids the exactly-once replay check reads.
     - ``min_age_s`` is the in-flight-commit guard (Delta's retention
       window): a concurrent committer's files exist on disk BEFORE its
       manifest publishes, and are indistinguishable from garbage until

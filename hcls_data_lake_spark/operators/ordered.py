@@ -302,6 +302,10 @@ def grouped_running_max(
 
     Requires at least one row per group (true by construction when the
     groups come from the data) and a NON-NULL bigint/double ``value``.
+    ``grp`` must hold no NaN: the carry state is keyed by the Python
+    group value, and NaN never equals itself, so a NaN group would lose
+    its carry between runs and come out as several rows (the one
+    caller, q_ts_concurrency, groups by the string ``event_type``).
     """
     import pyarrow as pa
 

@@ -1,10 +1,10 @@
 """Lake lifecycle jobs: zone promotion in batch and streaming.
 
 SURVEY.md §1.2: zone promotion (ingestion→staging) is a job, not an
-object copy. Batch form reads the ingestion zone and writes
-staged/error zones; streaming form watches the ingestion zone as a file
-source (A18) and routes every micro-batch through the same transform
-(one code path for both — the §1.5 batch/stream duality).
+object copy. Batch form recomputes the staged/error zones from the
+whole ingestion zone; streaming form watches the ingestion zone as a
+file source (A18) and appends every micro-batch through the same
+transform (one code path for both — the §1.5 batch/stream duality).
 """
 
 from __future__ import annotations
@@ -15,8 +15,9 @@ from hcls_data_lake_spark.pipeline.zones import write_zone
 from hcls_data_lake_spark.streaming.runner import run_foreach_batch
 
 
-def _route_batch(batch_df: DataFrame, lake_root: str) -> None:
-    """Route one (micro-)batch to staging/error zones.
+def _route_batch(batch_df: DataFrame, lake_root: str, mode: str) -> None:
+    """Route one (micro-)batch to staging/error zones, written with
+    ``mode`` (``"overwrite"`` replaces both zones, ``"append"`` adds).
 
     The parse boundary is the expensive stage, and staging and error
     are two separate write actions over the same parsed frame — pin it
@@ -37,16 +38,20 @@ def _route_batch(batch_df: DataFrame, lake_root: str) -> None:
     ).persist()
     try:
         staged, errored = route(parsed)
-        write_zone(staged, lake_root, "staging")
-        write_zone(errored, lake_root, "error")
+        write_zone(staged, lake_root, "staging", mode)
+        write_zone(errored, lake_root, "error", mode)
     finally:
         parsed.unpersist()
 
 
 def promote_ingestion_batch(spark: SparkSession, lake_root: str) -> None:
-    """One-shot promotion of the whole ingestion zone."""
+    """One-shot full recompute: re-stage the whole ingestion zone and
+    REPLACE the staging and error zones with the result, so running it
+    again on the same lake leaves the same rows. Incremental promotion
+    (only files not yet promoted, appended) is the stream form,
+    ``promote_ingestion_stream``."""
     ingested = spark.read.parquet(f"{lake_root}/ingestion")
-    _route_batch(ingested, lake_root)
+    _route_batch(ingested, lake_root, "overwrite")
 
 
 def promote_ingestion_stream(
@@ -64,7 +69,7 @@ def promote_ingestion_stream(
     sdf = spark.readStream.schema(schema).parquet(f"{lake_root}/ingestion")
     run_foreach_batch(
         sdf,
-        lambda df, _id: _route_batch(df, lake_root),
+        lambda df, _id: _route_batch(df, lake_root, "append"),
         checkpoint=f"{lake_root}/_checkpoints/promote_ingestion",
     )
 

@@ -588,8 +588,9 @@ def test_corpus_segments_all_known_to_grammar():
     which hl7apy does not support — the reference's parse raises
     UnsupportedVersion and the message dead-letters, so strict mode
     here returns None for it too (version-correct behavior)."""
-    from hcls_data_lake_spark.hl7.grammar import is_known
+    from hcls_data_lake_spark.hl7.grammar import grammar_for
 
+    is_known = grammar_for(None).is_known
     for name, msg in MESSAGES:
         doc = json.loads(parse_er7(msg))
         segs = _segment_ids(doc, set())
@@ -1456,12 +1457,33 @@ def test_qbp_pre24_version_dead_letters_in_strict():
 
 
 def test_qbp_rsp_structure_resolution():
-    from hcls_data_lake_spark.hl7 import grammar as g
+    from hcls_data_lake_spark.hl7.grammar import grammar_for
+
+    g = grammar_for(None)
 
     assert g.structure_for("QBP", "Q11", None) == "QBP_Q11"
     assert g.structure_for("RSP", "K11", None) == "RSP_K11"
     assert g.structure_tree("QBP_Q11") is not None
     assert g.structure_tree("RSP_K11") is not None
+
+
+@pytest.mark.parametrize("version", [None, "2.1", "2.3", "2.3.1", "2.7"])
+def test_every_resolved_structure_has_a_tree(version):
+    """The structure trees are the only per-structure shape source: any
+    structure a message can resolve to (an event->structure target, or
+    ACK) has a tree, so the flat union attachment only ever runs for a
+    message that resolved to no structure at all."""
+    from hcls_data_lake_spark.hl7.grammar import grammar_for
+
+    g = grammar_for(version)
+    for event, structure in g.event_structure.items():
+        mt, trig = event.split("_")
+        assert g.structure_for(mt, trig, None) == structure
+        assert g.structure_tree(structure) is not None, (version, event)
+        assert g.structure_for(mt, trig, structure) == structure
+    ack = g.structure_for("ACK", "A01", None)
+    if ack is not None:
+        assert g.structure_tree(ack) is not None, version
 
 
 def test_mfn_master_file_goldens():
@@ -1489,7 +1511,9 @@ def test_srm_srr_scheduling_request_goldens():
     groups) and SRR^S01 response (MSA + granted SCHEDULE). APR's SCV
     criteria repeat; the resource subgroups nest like the SIU family;
     sibling triggers resolve to the same structure."""
-    from hcls_data_lake_spark.hl7 import grammar as g
+    from hcls_data_lake_spark.hl7.grammar import grammar_for
+
+    g = grammar_for(None)
 
     srm = (
         "MSH|^~\\&|CLINIC|FAC|SCHED|DC|20240101||SRM^S01^SRM_S01|R1|P|2.5\r"

@@ -64,6 +64,57 @@ def test_publish_conflict_retries_to_next_version(spark, tmp_path):
     assert _collect(spark, root, 3) == [0, 1, 2, 3, 4, 5]
 
 
+def _fenced_publish(root, bid, mode="append"):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    rel = os.path.join("data", f"part-{bid}-{mode}", "part.parquet")
+    os.makedirs(os.path.join(root, os.path.dirname(rel)), exist_ok=True)
+    pq.write_table(
+        pa.table({"k": pa.array([bid], pa.int64())}), os.path.join(root, rel)
+    )
+    schema = StructType([StructField("k", LongType())])
+    return manifest.publish(
+        root, [rel], schema, mode, meta={"batch_id": bid}, txn_key="batch_id"
+    )
+
+
+def test_txn_fence_reads_one_manifest(tmp_path, monkeypatch):
+    """Each manifest carries the committed txn values forward, so the
+    replay fence reads the newest manifest only — not one per version —
+    and still holds after vacuum expires the manifests that first
+    recorded them (Spark-free: publish over hand-written parquet)."""
+    root = str(tmp_path / "tbl")
+    for bid in range(50):
+        mode = "overwrite" if bid % 10 == 9 else "append"
+        assert _fenced_publish(root, bid, mode) == bid + 1
+    loads = []
+    real_load = manifest._load
+    monkeypatch.setattr(
+        manifest, "_load", lambda *a: loads.append(a) or real_load(*a)
+    )
+    assert _fenced_publish(root, 50) == 51
+    assert len(loads) <= 2
+    monkeypatch.setattr(manifest, "_load", real_load)
+
+    def replays_all():
+        return all(_fenced_publish(root, bid) == 0 for bid in range(51))
+
+    assert manifest.committed_meta(root, "batch_id") == set(range(51))
+    assert replays_all()
+    manifest.vacuum(root, keep_last=1, min_age_s=0)
+    assert manifest.versions(root) == [51]
+    assert replays_all()
+    # with no live manifest left, the newest expired one still fences,
+    # and the next publish does not reuse an expired version number
+    manifest.vacuum(root, keep_last=0, min_age_s=0)
+    assert manifest.versions(root) == []
+    assert replays_all()
+    assert _fenced_publish(root, 51) == 52
+    assert manifest.committed_meta(root, "batch_id") == set(range(52))
+
+
 def test_vacuum_deletes_only_unreferenced_files(spark, tmp_path):
     root = str(tmp_path / "tbl")
     manifest.commit(_df(spark, 0, 3), root)

@@ -190,6 +190,33 @@ def test_lake_lifecycle_streaming_promotion(spark, wire_df, tmp_path):
     assert read_zone(spark, lake, "error").count() == 1
 
 
+def test_batch_promotion_is_idempotent(spark, wire_df, tmp_path):
+    """The batch form is a full recompute of the staging and error zones
+    from the whole ingestion zone: a second call on the same lake leaves
+    exactly the ids one call left (appending would duplicate them)."""
+    from hcls_data_lake_spark.pipeline.jobs import promote_ingestion_batch
+    from hcls_data_lake_spark.pipeline.zones import read_zone, write_zone
+
+    lake = str(tmp_path / "lake")
+    empty_registry = spark.createDataFrame([], "msg_hash string")
+    write_zone(_ingest(wire_df, empty_registry), lake, "ingestion")
+
+    def zone_ids():
+        return {
+            zone: sorted(
+                r.message_id
+                for r in read_zone(spark, lake, zone).select("message_id").collect()
+            )
+            for zone in ("staging", "error")
+        }
+
+    promote_ingestion_batch(spark, lake)
+    once = zone_ids()
+    assert len(once["staging"]) == 11 and len(once["error"]) == 1
+    promote_ingestion_batch(spark, lake)
+    assert zone_ids() == once
+
+
 def test_compact_zone_shrinks_files_preserves_rows(spark, tmp_path):
     from hcls_data_lake_spark.pipeline.jobs import compact_zone
 

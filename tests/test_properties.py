@@ -39,11 +39,10 @@ def test_parse_roundtrips_plain_fields(fields):
     non-leaf child, fields included) — and a field whose vendored
     datatype is a KNOWN COMPOSITE wraps a single component into the
     one-key dict hl7apy serializes (r7, VERDICT r6 ask #4)."""
-    from hcls_data_lake_spark.hl7.grammar import (
-        PRIMITIVE_TYPES,
-        field_datatype,
-        field_repeats,
-    )
+    from hcls_data_lake_spark.hl7.grammar import PRIMITIVE_TYPES, grammar_for
+
+    field_datatype = grammar_for(None).field_datatype
+    field_repeats = grammar_for(None).field_repeats
 
     msg = "MSH|^~\\&|A|B|C|D|20240101||ADT^A01|1|P|2.5\rPID|" + "|".join(fields)
     doc = json.loads(parse_er7(msg))
